@@ -65,6 +65,7 @@ from dataclasses import dataclass
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fluxdb_spark.schema import CHANGELOG_SCHEMA
 
@@ -325,10 +326,15 @@ class CommitLog:
                     pass
         return vmax
 
-    def entries(self, up_to: int | None = None) -> list[dict]:
-        """All entries in version order (optionally only <= up_to)."""
+    def entries(self, after: int = 0, up_to: int | None = None) -> list[dict]:
+        """The entries with version in (after, up_to], in version order.
+        Only those files are opened (or even sorted): the zero-padded
+        names compare as their versions do, so a reader that knows where
+        it stopped pays one directory listing plus the entries since
+        then, not a parse of the whole log."""
+        lo = self._name(after)
         out = []
-        for fname in sorted(os.listdir(self.dir)):
+        for fname in sorted(f for f in os.listdir(self.dir) if f > lo):
             if not (fname.startswith("v") and fname.endswith(".json")):
                 continue
             try:
@@ -349,6 +355,63 @@ class CommitLog:
             entry["version"] = version
             out.append(entry)
         return out
+
+    def appends_between(
+        self, after: int, up_to: int | None = None
+    ) -> tuple[int, list[str]] | None:
+        """The delta rule every incremental reader shares. Returns
+        `(top, relpaths)`: `top` is `up_to` (default: the latest version)
+        and `relpaths` the data files the append commits in (after, top]
+        added, in version order. Returns None when that range cannot be
+        read as a delta and the caller must rebuild at `top` instead:
+
+        - the range holds a non-compact rewrite (expire / DML), which
+          erased or re-placed rows a reader at `after` already holds;
+        - a compaction removed one of those append files (it merged
+          them into a band file that also holds rows at or below
+          `after`, and the originals are gone).
+
+        A compaction that touches only files at or below `after` moves
+        no rows into or out of the delta and passes through. A bad range,
+        or entries missing from it (pruned beneath a log checkpoint),
+        raise WriteConsistencyError: a gap is never read as partial
+        rows."""
+        latest = self.latest_version()
+        top = latest if up_to is None else up_to
+        if not 0 <= after <= top <= latest:
+            raise WriteConsistencyError(
+                f"invalid commit range ({after}, {top}]: "
+                f"latest version is {latest}"
+            )
+        # entries above `top` still count for removals: a later
+        # rewrite may have vacuumed files the range added
+        newer = self.entries(after=after)
+        in_range = [e for e in newer if e["version"] <= top]
+        # dense-claim invariant: fewer entries than versions means the
+        # per-commit entry files for part of the range were pruned
+        if len(in_range) != top - after:
+            raise WriteConsistencyError(
+                f"incremental read ({after}, {top}] is not resolvable: "
+                "commit entries in the range were pruned"
+            )
+        adds = [
+            rel
+            for e in in_range
+            if e.get("action") == "append"
+            for rel in e.get("add", ())
+        ]
+        removed = {
+            rel
+            for e in newer
+            if e.get("action") == "rewrite"
+            for rel in e.get("remove", ())
+        }
+        if removed.intersection(adds) or any(
+            e.get("action") == "rewrite" and e.get("kind") != "compact"
+            for e in in_range
+        ):
+            return None
+        return top, adds
 
     def contains(self, key: str, value) -> bool:
         """Has any entry already recorded `key == value`? (idempotence
@@ -431,13 +494,19 @@ class CommitLog:
         maintenance (compact does it automatically); concurrent claims
         landing above the snapshot are unaffected, resolution just applies
         them on top. Old checkpoints are pruned (the newest subsumes
-        them). Returns the checkpointed version (0 = empty log)."""
-        entries = self.entries()
+        them). Each snapshot starts from the previous one, so it reads
+        only the entries since then — and stays exact after
+        prune_entries dropped the entries beneath it. Returns the
+        checkpointed version (0 = empty log)."""
+        prev = self.newest_log_checkpoint() or {
+            "version": 0, "files": [], "floor": 0
+        }
+        entries = self.entries(after=prev["version"])
         if not entries:
-            return 0
+            return prev["version"]
         version = entries[-1]["version"]
-        files: set[str] = set()
-        floor = 0
+        files = set(prev["files"])
+        floor = prev.get("floor", 0)
         for e in entries:
             files.update(e.get("add", ()))
             files.difference_update(e.get("remove", ()))
@@ -491,6 +560,42 @@ class CommitLog:
             except FileNotFoundError:
                 pass
         return pruned
+
+
+# the changelog columns plus the Hive partition column that a read
+# anchored at the data directory (basePath) carries
+_READ_SCHEMA = T.StructType(
+    CHANGELOG_SCHEMA.fields
+    + [T.StructField("height_band", T.LongType(), True)]
+)
+
+
+def _stored_meta(root: str) -> dict | None:
+    """The store's sticky physical layout (`height_band`,
+    `data_format`), written with its first batch; None before that."""
+    path = os.path.join(root, "_meta.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def read_changelog_files(
+    spark: SparkSession, root: str, relpaths: list[str]
+) -> DataFrame:
+    """The changelog rows of the data files `relpaths` (relative to the
+    store `root`, as commit entries record them), read in the format the
+    store recorded in `_meta.json` — the one file reader that
+    `appended_between`, the derived-table maintainers and the follower
+    share, so none of them needs out-of-band knowledge of the backend."""
+    data_format = (_stored_meta(root) or {}).get("data_format", "parquet")
+    return (
+        spark.read.option("basePath", os.path.join(root, "changelog"))
+        .schema(_READ_SCHEMA)
+        .format(data_format)
+        .load([os.path.join(root, rel) for rel in relpaths])
+        .drop("height_band")
+    )
 
 
 class StoreBackend:
@@ -735,11 +840,7 @@ class FileChangelogBackend(StoreBackend):
         unreconstructable — refused loudly, never resolved to paths that
         no longer exist; likewise versions below a pruned log region."""
         log = self.commit_log
-        ckpt = log.newest_log_checkpoint()
-        entries = log.entries()
-        latest = entries[-1]["version"] if entries else (
-            ckpt["version"] if ckpt else 0
-        )
+        latest = log.latest_version()
         if latest == 0:
             raise WriteConsistencyError(
                 "store has no commit history: nothing to time-travel to"
@@ -748,19 +849,19 @@ class FileChangelogBackend(StoreBackend):
             raise WriteConsistencyError(
                 f"version {version} does not exist yet (latest: {latest})"
             )
+        ckpt = log.newest_log_checkpoint() or {
+            "version": 0, "files": [], "floor": 0
+        }
+        # the checkpoint carries the newest rewrite at or below it; only
+        # the entries above it are read for the rest of the floor
+        newer = log.entries(after=ckpt["version"])
         floor = max(
-            (e["version"] for e in entries if e.get("action") == "rewrite"),
-            default=0,
+            [ckpt.get("floor", 0)]
+            + [e["version"] for e in newer if e.get("action") == "rewrite"]
         )
-        if ckpt is not None:
-            floor = max(floor, ckpt.get("floor", 0))
         if version < floor:
             kind = next(
-                (
-                    e.get("kind")
-                    for e in entries
-                    if e["version"] == floor
-                ),
+                (e.get("kind") for e in log.entries(floor - 1, floor)),
                 "rewrite",
             )
             raise WriteConsistencyError(
@@ -768,12 +869,12 @@ class FileChangelogBackend(StoreBackend):
                 f"({kind}): rewritten history is vacuumed eagerly and "
                 "cannot be read"
             )
-        files: set[str] = set()
-        base_version = 0
-        if ckpt is not None and ckpt["version"] <= version:
-            files = set(ckpt["files"])
-            base_version = ckpt["version"]
-        tail = [e for e in entries if base_version < e["version"] <= version]
+        if ckpt["version"] <= version:
+            files, base_version = set(ckpt["files"]), ckpt["version"]
+            tail = [e for e in newer if e["version"] <= version]
+        else:
+            files, base_version = set(), 0
+            tail = log.entries(up_to=version)
         # versions are claimed densely, so the (base_version, version]
         # range must hold exactly version - base_version entries — fewer
         # means entry files beneath the log checkpoint were pruned
@@ -1144,11 +1245,9 @@ class ChangelogStore:
         # batch lands, the stored values win over the constructor
         # arguments, so maintenance tools (and followers) opening the
         # store with defaults still see the real bands and format
-        meta_path = os.path.join(root, "_meta.json")
+        meta = _stored_meta(root)
         stored_band = None
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
+        if meta is not None:
             stored_band = int(meta["height_band"])
             data_format = meta.get("data_format", "parquet")
         if data_format not in BACKENDS:
@@ -1966,14 +2065,8 @@ class ChangelogStore:
             raise WriteConsistencyError(
                 "pending write manifest: run recover() before rewriting"
             )
-        from pyspark.sql import types as T
-
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        read_schema = T.StructType(
-            CHANGELOG_SCHEMA.fields
-            + [T.StructField("height_band", T.LongType(), True)]
-        )
-        df = self._backend.committed_relation(read_schema, self.checkpoint)
+        df = self._backend.committed_relation(_READ_SCHEMA, self.checkpoint)
         stats = {"kind": kind, "bands_rewritten": 0, "rows_matched": 0}
         if df is None:
             return stats
@@ -2098,8 +2191,6 @@ class ChangelogStore:
         heights it covered. Resolved from the backend's commit log;
         versions below the newest rewrite commit (compact / expire / DML)
         are refused because rewrites vacuum replaced files eagerly."""
-        from pyspark.sql import types as T
-
         if max_height is not None:
             horizon = self.retention_horizon()
             if max_height < horizon:
@@ -2107,14 +2198,10 @@ class ChangelogStore:
                     f"read at height {max_height} is below the retention "
                     f"horizon {horizon}: that history was expired"
                 )
-        read_schema = T.StructType(
-            CHANGELOG_SCHEMA.fields
-            + [T.StructField("height_band", T.LongType(), True)]
-        )
         if at_version is not None:
-            df = self._backend.relation_at_version(read_schema, at_version)
+            df = self._backend.relation_at_version(_READ_SCHEMA, at_version)
         else:
-            df = self._backend.committed_relation(read_schema, self.checkpoint)
+            df = self._backend.committed_relation(_READ_SCHEMA, self.checkpoint)
         if df is None:
             return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
         if max_height is not None:
@@ -2135,63 +2222,31 @@ class ChangelogStore:
         checkpoints a commit version refreshes with one bounded read
         instead of re-scanning a 100 TB log.
 
-        Same loud-refusal contract as commit time travel: a range that
-        reaches below the newest rewrite commit (compact / DML / expire
-        re-place or erase the files appends created) or below the pruned
-        entry region cannot be resolved and raises — it never silently
-        returns partial rows. Maintenance commits inside the range are
-        fine: they append no logical rows and are skipped."""
+        Same loud-refusal contract as commit time travel: a range the
+        commit log cannot read as a delta (`CommitLog.appends_between`:
+        it holds an expire / DML rewrite, or a rewrite vacuumed one of
+        its append files) or that reaches into the pruned entry region
+        raises — it never silently returns partial rows. Compactions of
+        files outside the range are fine: they append no logical rows
+        and are skipped."""
         log = self._backend.commit_log
-        entries = log.entries()
-        latest = log.latest_version()
-        if up_to is None:
-            up_to = latest
-        if not 0 <= after_version <= up_to <= latest:
-            raise WriteConsistencyError(
-                f"invalid commit range ({after_version}, {up_to}]: "
-                f"latest version is {latest}"
+        delta = log.appends_between(after_version, up_to)
+        if delta is None:
+            floor = max(
+                e["version"]
+                for e in log.entries(after=after_version)
+                if e.get("action") == "rewrite"
             )
-        floor = max(
-            (e["version"] for e in entries if e.get("action") == "rewrite"),
-            default=0,
-        )
-        ckpt = log.newest_log_checkpoint()
-        if ckpt is not None:
-            floor = max(floor, ckpt.get("floor", 0))
-        if after_version < floor and after_version < up_to:
             raise WriteConsistencyError(
                 f"incremental read from version {after_version} crosses "
                 f"rewrite commit {floor}: appended files below a rewrite "
                 "are re-placed or vacuumed — re-sync from changelog() "
                 "instead"
             )
-        in_range = [
-            e for e in entries if after_version < e["version"] <= up_to
-        ]
-        # dense-claim invariant: fewer entries than versions means the
-        # per-commit entry files for part of the range were pruned
-        if len(in_range) != up_to - after_version:
-            raise WriteConsistencyError(
-                f"incremental read ({after_version}, {up_to}] is not "
-                "resolvable: commit entries in the range were pruned"
-            )
-        files = [
-            os.path.join(self.root, rel)
-            for e in sorted(in_range, key=lambda e: e["version"])
-            if e.get("action") == "append"
-            for rel in e.get("add", ())
-        ]
+        _top, files = delta
         if not files:
             return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
-        from pyspark.sql import types as T
-
-        read_schema = T.StructType(
-            CHANGELOG_SCHEMA.fields
-            + [T.StructField("height_band", T.LongType(), True)]
-        )
-        return self._backend._read(
-            *files, schema=read_schema, base_path=self._data_dir
-        ).drop("height_band")
+        return read_changelog_files(self.spark, self.root, files)
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY analog: one row per commit, in version order —

@@ -34,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
+from fluxdb_spark.store import read_changelog_files
 
 COMMIT_ENTRY_SCHEMA = T.StructType(
     [
@@ -72,20 +72,6 @@ def follow_store(
     """Start a streaming query that calls `sink(rows_df, batch_id)` with
     the newly committed changelog rows of each micro-batch (appends only,
     version order). Returns the StreamingQuery; stop() it to detach."""
-    read_schema = T.StructType(
-        CHANGELOG_SCHEMA.fields
-        + [T.StructField("height_band", T.LongType(), True)]
-    )
-    data_dir = os.path.join(root, "changelog")
-    # the source store's physical format lives in its _meta.json, so a
-    # follower needs no out-of-band knowledge of the backend choice
-    data_format = "parquet"
-    meta_path = os.path.join(root, "_meta.json")
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            data_format = json.load(f).get("data_format", "parquet")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # O(commits-in-batch) driver rows: version + file list only —
@@ -96,20 +82,12 @@ def follow_store(
             .collect()
         )
         files = [
-            os.path.join(root, rel)
+            rel
             for e in sorted(entries, key=lambda e: e.version)
             for rel in (e.add or ())
         ]
-        if not files:
-            return
-        rows = (
-            spark.read.option("basePath", data_dir)
-            .schema(read_schema)
-            .format(data_format)
-            .load(files)
-            .drop("height_band")
-        )
-        sink(rows, batch_id)
+        if files:
+            sink(read_changelog_files(spark, root, files), batch_id)
 
     return (
         stream_commits(spark, root)

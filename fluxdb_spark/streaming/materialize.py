@@ -38,9 +38,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
+from fluxdb_spark.store import ChangelogStore, CommitLog, read_changelog_files
 from fluxdb_spark.streaming.follow import stream_commits
 
 _MERGE = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -169,16 +168,14 @@ def materialize_aggregate(
                 f"unsupported merge '{merge}': algebraic merges are "
                 f"{sorted(_MERGE)}"
             )
-    read_schema = T.StructType(
-        CHANGELOG_SCHEMA.fields
-        + [T.StructField("height_band", T.LongType(), True)]
-    )
-    data_dir = os.path.join(src_root, "changelog")
-    data_format = "parquet"
-    meta_path = os.path.join(src_root, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            data_format = json.load(f).get("data_format", "parquet")
+    log = CommitLog(src_root)
+
+    def _aggregate(rows: DataFrame) -> DataFrame:
+        if pre is not None:
+            rows = pre(rows)
+        return rows.groupBy(*group_cols).agg(
+            *[F.expr(expr).alias(name) for name, expr, _m in aggs]
+        )
 
     def _swap_in(part: DataFrame, version: int) -> None:
         tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
@@ -191,66 +188,30 @@ def materialize_aggregate(
         os.rename(tmp, dest)
         shutil.rmtree(old, ignore_errors=True)
 
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
+    def catch_up() -> None:
+        # the commit stream is only the trigger: the floor inside the
+        # table is the resume point, and the log serves the delta above it
         floor = applied_version(dest)
-        batch = sorted(
-            (
-                e
-                for e in batch_df.select(
-                    "version", "action", "kind", "add"
-                ).collect()
-                if e.version > floor
-            ),
-            key=lambda e: e.version,
-        )
-        if not batch:
+        top = log.latest_version()
+        if top <= floor:
             return
-        # A non-compacting rewrite (expire / delete_where / redact_where)
-        # re-places or erases rows the aggregate already folded, so the
-        # delta fold would silently diverge forever — the exact situation
-        # appended_between refuses loudly. Rebuild instead: one commit-
-        # level time-travel read at the log's current latest version —
-        # O(store) once per rewrite, never a wrong answer. The floor
-        # advances to that version, so entries the stream delivers later
-        # for commits the rebuild already covered fold as no-ops.
-        # Compactions are row-preserving band swaps and need no rebuild.
-        if any(
-            e.action == "rewrite" and e.kind != "compact" for e in batch
-        ):
-            from fluxdb_spark.store import ChangelogStore
-
+        delta = log.appends_between(floor, top)
+        if delta is None:
+            # The delta cannot be folded: a non-compacting rewrite
+            # (expire / delete_where / redact_where) re-placed or erased
+            # rows the aggregate already folded, or a compaction merged
+            # away append files not yet folded. Rebuild instead: one
+            # commit-level time-travel read at `top` — O(store) once per
+            # such rewrite, never a wrong answer. The floor advances to
+            # `top`, so later triggers for commits the rebuild covered
+            # are no-ops.
             store = ChangelogStore(spark, src_root)
-            top = store._backend.commit_log.latest_version()
-            full = store.changelog(at_version=top)
-            if pre is not None:
-                full = pre(full)
-            _swap_in(
-                full.groupBy(*group_cols).agg(
-                    *[F.expr(expr).alias(name) for name, expr, _m in aggs]
-                ),
-                top,
-            )
+            _swap_in(_aggregate(store.changelog(at_version=top)), top)
             return
-        entries = [e for e in batch if e.action == "append"]
-        if not entries:
-            return
-        files = [
-            os.path.join(src_root, rel)
-            for e in entries
-            for rel in (e.add or ())
-        ]
-        rows = (
-            spark.read.option("basePath", data_dir)
-            .schema(read_schema)
-            .format(data_format)
-            .load(files)
-            .drop("height_band")
-        )
-        if pre is not None:
-            rows = pre(rows)
-        part = rows.groupBy(*group_cols).agg(
-            *[F.expr(expr).alias(name) for name, expr, _m in aggs]
-        )
+        _top, files = delta
+        if not files:
+            return  # compactions of already-folded files change nothing
+        part = _aggregate(read_changelog_files(spark, src_root, files))
         cur = read_aggregate(spark, dest)
         if cur is not None:
             part = (
@@ -264,11 +225,11 @@ def materialize_aggregate(
                     ]
                 )
             )
-        _swap_in(part, entries[-1].version)
+        _swap_in(part, top)
 
     return (
         stream_commits(spark, src_root)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(lambda _df, _batch_id: catch_up())
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()

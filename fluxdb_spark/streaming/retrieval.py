@@ -9,16 +9,17 @@ sibling of streaming/materialize.py's algebraic aggregates. Queries then
 join the materialized table instead of re-hashing the corpus.
 
 `materialize_rowwise` is the generic maintainer: follow the commit log,
-read ONLY each append commit's added files, apply a deterministic
-row-wise `transform` (changelog rows -> derived rows), and land the
-output under `dest/commit_hi=<version>/`. Exactly-once comes from
-IDEMPOTENT REPLAY, not an atomic data+state commit: derived batch
+read ONLY the files the append commits above the floor added, apply a
+deterministic row-wise `transform` (changelog rows -> derived rows), and
+land the output under `dest/commit_hi=<version>/`. Exactly-once comes
+from IDEMPOTENT REPLAY, not an atomic data+state commit: derived batch
 directories are named by the commit version they cover, unconfirmed
 directories above the applied-version floor are dropped and rewritten on
-redelivery, and readers only see directories at-or-below the floor. A
-non-compacting rewrite commit (DML / retention) invalidates derived rows
-wholesale, so the maintainer rebuilds from commit-level time travel —
-same loud-correctness contract as the aggregate maintainer.
+redelivery, and readers only see directories at-or-below the floor. When
+the log cannot serve the delta (`CommitLog.appends_between`: a DML /
+retention rewrite, or a compaction that merged away unapplied append
+files) the maintainer rebuilds from commit-level time travel — the same
+rule the aggregate maintainer applies.
 
 Updates and deletes flow WITHOUT rewrites too: derived rows carry
 (height, is_deletion), and `lww_latest` applies the store's
@@ -39,10 +40,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
 from fluxdb_spark.session import spread
+from fluxdb_spark.store import ChangelogStore, CommitLog, read_changelog_files
 from fluxdb_spark.streaming.follow import stream_commits
 from fluxdb_spark.streaming.materialize import (
     _recover,
@@ -69,17 +69,22 @@ instead."""
 def _stored_format(dest: str) -> int | None:
     """The format stamp in dest's state file: None when the dest has
     no confirmed state yet (fresh dir), 1 when the state predates
-    format stamping."""
-    path = _state_path(dest)
-    if not os.path.exists(path):
-        return None
+    format stamping. An unreadable or corrupt state file raises: read
+    as "no state", it would make read_derived return no rows."""
     import json
 
+    path = _state_path(dest)
     try:
         with open(path) as f:
             return int(json.load(f).get("format", 1))
-    except (ValueError, OSError):
+    except FileNotFoundError:
         return None
+    except (OSError, ValueError, AttributeError, TypeError) as e:
+        raise ValueError(
+            f"derived table state {path} is unreadable or corrupt ({e})."
+            " Rebuild the index (delete the directory and re-run "
+            "refresh / index-retrieval)"
+        ) from e
 
 
 def _check_format(dest: str) -> None:
@@ -151,29 +156,20 @@ def lww_latest(df: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
-    """Build the commit-batch processor shared by BOTH maintenance
-    drivers: the continuous streaming maintainer (`materialize_rowwise`,
-    one call per micro-batch) and the one-shot batch catch-up
-    (`refresh`, one call over the whole commit log).  Single code path =
-    the derived directories are byte-identical whichever driver ran,
-    because the processor (applied_version floor -> delta file read ->
-    deterministic transform -> versioned directory write) is the same
-    function object in both."""
+    """Build the catch-up shared by BOTH maintenance drivers: the
+    continuous streaming maintainer (`materialize_rowwise`, whose commit
+    stream is only the trigger) and the one-shot batch catch-up
+    (`refresh` / `refresh_many`).  Single code path = the derived
+    directories are byte-identical whichever driver ran: applied_version
+    floor -> `CommitLog.appends_between` -> delta file read ->
+    deterministic transform -> versioned directory write, or a rebuild
+    at the log's top when the range cannot be read as a delta.  The
+    floor file is the resume point, so a catch-up opens only the commit
+    entries above it."""
     # refuse to append format-N rows into a dest built by a different
     # layout generation — the caller must rebuild instead
     _check_format(dest)
-    read_schema = T.StructType(
-        CHANGELOG_SCHEMA.fields
-        + [T.StructField("height_band", T.LongType(), True)]
-    )
-    data_dir = os.path.join(src_root, "changelog")
-    data_format = "parquet"
-    meta_path = os.path.join(src_root, "_meta.json")
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            data_format = json.load(f).get("data_format", "parquet")
+    log = CommitLog(src_root)
 
     def _commit(df: DataFrame, version: int, floor: int) -> None:
         # drop unconfirmed leftovers of a crashed batch, then land the
@@ -201,76 +197,49 @@ def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
             )
         os.replace(tmp, _state_path(dest))
 
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        process_entries(
-            batch_df.select("version", "action", "kind", "add").collect()
-        )
+    def _rebuild(top: int) -> None:
+        # the delta's source bytes are gone (rewritten history, or append
+        # files a compaction merged away): rebuild from commit-level time
+        # travel into a staged directory and swap atomically (readers see
+        # the old index or the new one, never a half-rebuilt mixture;
+        # _recover heals a torn swap)
+        import json
+        import uuid
 
-    def process_entries(rows) -> None:
-        # pre-collected commit entries (refresh_many collects the log
-        # ONCE and replays the same row list through every table's
-        # processor — no per-table log scan, no local-DataFrame round
-        # trip)
+        store = ChangelogStore(spark, src_root)
+        full = transform(store.changelog(at_version=top))
+        tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
+        full.write.mode("overwrite").parquet(
+            os.path.join(tmp, f"commit_hi={top}")
+        )
+        with open(_state_path(tmp), "w") as f:
+            json.dump({"applied_version": top, "format": DERIVED_FORMAT}, f)
+        old = f"{dest}.old-{uuid.uuid4().hex}"
+        if os.path.isdir(dest):
+            os.rename(dest, old)
+        os.rename(tmp, dest)
+        shutil.rmtree(old, ignore_errors=True)
+
+    def catch_up() -> None:
         floor = applied_version(dest)
-        batch = sorted(
-            (e for e in rows if e.version > floor),
-            key=lambda e: e.version,
-        )
-        if not batch:
+        top = log.latest_version()
+        if top <= floor:
             return
-        if any(
-            e.action == "rewrite" and e.kind != "compact" for e in batch
-        ):
-            # rewritten history invalidates derived rows wholesale (the
-            # source bytes they were computed from are gone): rebuild
-            # from commit-level time travel into a staged directory and
-            # swap atomically (readers see the old index or the new one,
-            # never a half-rebuilt mixture; _recover heals a torn swap)
-            import json
-            import uuid
-
-            from fluxdb_spark.store import ChangelogStore
-
-            store = ChangelogStore(spark, src_root)
-            top = store._backend.commit_log.latest_version()
-            full = transform(store.changelog(at_version=top))
-            tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
-            full.write.mode("overwrite").parquet(
-                os.path.join(tmp, f"commit_hi={top}")
-            )
-            with open(_state_path(tmp), "w") as f:
-                json.dump(
-                    {"applied_version": top, "format": DERIVED_FORMAT}, f
-                )
-            old = f"{dest}.old-{uuid.uuid4().hex}"
-            if os.path.isdir(dest):
-                os.rename(dest, old)
-            os.rename(tmp, dest)
-            shutil.rmtree(old, ignore_errors=True)
+        delta = log.appends_between(floor, top)
+        if delta is None:
+            _rebuild(top)
             return
-        entries = [e for e in batch if e.action == "append"]
-        if not entries:
-            return
-        files = [
-            os.path.join(src_root, rel)
-            for e in entries
-            for rel in (e.add or ())
-        ]
-        rows = (
-            spark.read.option("basePath", data_dir)
-            .schema(read_schema)
-            .format(data_format)
-            .load(files)
-            .drop("height_band")
-        )
+        _top, files = delta
+        if not files:
+            return  # only compactions of already-applied files
+        rows = read_changelog_files(spark, src_root, files)
         # a small delta arrives as few splits and would run the
         # (map-heavy: signatures, bucket hashes) transform on as few
         # tasks; spread() fans it across the cores and is a no-op once
         # the delta already has enough splits
-        _commit(transform(spread(rows)), entries[-1].version, floor)
+        _commit(transform(spread(rows)), top, floor)
 
-    process.entries = process_entries  # refresh_many's shared-read hook
-    return process
+    return catch_up
 
 
 def materialize_rowwise(
@@ -290,12 +259,11 @@ def materialize_rowwise(
     Scale shape per refresh: the delta read touches only the new
     commits' files (O(delta)); the transform is map-only for every
     shipped index (signatures, buckets, centroid assignment), so no
-    shuffle at all; the corpus is never re-read except on a rewrite
-    rebuild."""
-    process = _rowwise_processor(spark, src_root, dest, transform)
+    shuffle at all; the corpus is never re-read except on a rebuild."""
+    catch_up = _rowwise_processor(spark, src_root, dest, transform)
     return (
         stream_commits(spark, src_root)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(lambda _df, _batch_id: catch_up())
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
@@ -1346,12 +1314,11 @@ def refresh(
     checkpoint_dir: str,
 ):
     """One synchronous catch-up pass (the batch twin of the continuous
-    maintainer): process every commit the index hasn't folded, then
-    stop. Returns the derived relation.
+    maintainer): fold every commit above the index's applied-version
+    floor, then stop. Returns the derived relation.
 
-    Drives the SAME processor the streaming maintainer applies per
-    micro-batch, directly over a batch read of the commit log — no
-    streaming-query startup, offset log or trigger machinery (the
+    Runs the SAME catch-up the streaming maintainer runs per trigger —
+    no streaming-query startup, offset log or trigger machinery (the
     `applied_version` floor in the dest state file is the resume point,
     so offsets add nothing to a one-shot pass; measured ~2 s of pure
     setup per refresh at 32 cores).  `checkpoint_dir` is accepted for
@@ -1362,40 +1329,29 @@ def refresh(
 
 def refresh_many(spark: SparkSession, src_root: str, jobs):
     """One synchronous catch-up pass for SEVERAL derived tables of the
-    SAME store: the commit log is listed, read and collected ONCE and
-    replayed through every table's processor, instead of one log
-    listing + JSON scan per table (at 100 TB the log read is the
-    per-refresh fixed cost; a service maintaining an inverted file AND
-    a codes table — or postings AND doclens — pays it once per catch-up,
-    not once per table).  The per-table catch-ups write to disjoint
-    dests, so they run as CONCURRENT driver jobs (guide §2.6): each is
-    the unchanged single-table processor, concurrency only overlaps
-    their job tails.  `jobs` is a list of (dest, transform); returns
-    the post-catch-up `read_derived` relation per job, in order."""
+    SAME store.  Each table resolves its own delta from its own floor
+    (`CommitLog.appends_between` opens only the entries above it, in
+    plain Python — no Spark job for the log), so the fixed cost grows
+    with the commits since the last catch-up, not with the age of the
+    store.  The per-table catch-ups write to disjoint dests, so they run
+    as CONCURRENT driver jobs (guide §2.6): each is the unchanged
+    single-table catch-up, concurrency only overlaps their job tails.
+    `jobs` is a list of (dest, transform); returns the post-catch-up
+    `read_derived` relation per job, in order."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    procs = [
+    catch_ups = [
         _rowwise_processor(spark, src_root, dest, tf) for dest, tf in jobs
     ]
-    commits_dir = os.path.join(src_root, "_commits")
-    if os.path.isdir(commits_dir):
-        from fluxdb_spark.streaming.follow import COMMIT_ENTRY_SCHEMA
-
-        log = spark.read.schema(COMMIT_ENTRY_SCHEMA).json(commits_dir)
-        if len(procs) == 1:
-            procs[0](log, 0)
-        else:
-            # one scan of the log dir; the collected row list replays
-            # through every processor directly (no local-DataFrame
-            # round trip — measured slower than the scan it saved)
-            rows = log.select("version", "action", "kind", "add").collect()
-            with ThreadPoolExecutor(max_workers=len(procs)) as pool:
-                futs = [
-                    pool.submit(inheritable_thread_target(p.entries), rows)
-                    for p in procs
-                ]
-                for f in futs:
-                    f.result()
+    if len(catch_ups) == 1:
+        catch_ups[0]()
+    else:
+        with ThreadPoolExecutor(max_workers=len(catch_ups)) as pool:
+            futs = [
+                pool.submit(inheritable_thread_target(c)) for c in catch_ups
+            ]
+            for f in futs:
+                f.result()
     return [read_derived(spark, dest) for dest, _ in jobs]

@@ -8,6 +8,22 @@ from fluxdb_spark.schema import CHANGELOG_SCHEMA, SPECULATIVE_SCHEMA
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """pytest.ini's addopts deselects the sweep tier by default; say so
+    at the end of the run, where it is seen."""
+    from _pytest.mark.expression import Expression
+
+    expr = config.option.markexpr
+    if expr and not Expression.compile(expr).evaluate(
+        lambda name, **_kw: name == "sweep"
+    ):
+        terminalreporter.write_line(
+            f"sweep tier skipped (-m '{expr}'): run with "
+            "-m 'sweep or not sweep' to include it",
+            yellow=True,
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="fluxdb_spark_tests", shuffle_partitions=8)

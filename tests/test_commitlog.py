@@ -51,6 +51,23 @@ class TestCommitLogClaims:
         for i in range(4):
             log.claim({"action": "append", "i": i})
         assert [e["i"] for e in log.entries(up_to=2)] == [0, 1]
+        assert [e["i"] for e in log.entries(after=2)] == [2, 3]
+        assert [e["i"] for e in log.entries(after=1, up_to=3)] == [1, 2]
+        assert log.entries(after=4) == []
+
+    def test_entries_after_never_opens_older_entries(self, tmp_path):
+        """A reader that resumes at `after` opens only the entries above
+        it: corrupt entries at or below `after` would fail the read if
+        they were opened."""
+        log = CommitLog(str(tmp_path))
+        for i in range(4):
+            log.claim({"action": "append", "i": i})
+        for version in (1, 2):
+            with open(os.path.join(log.dir, log._name(version)), "w") as f:
+                f.write("{not json")
+        with pytest.raises(ValueError):
+            log.entries()
+        assert [e["i"] for e in log.entries(after=2)] == [2, 3]
 
     def test_claim_leaves_no_temp_files(self, tmp_path):
         log = CommitLog(str(tmp_path))
@@ -909,6 +926,18 @@ class TestAppendedBetween:
             r.height for r in store.appended_between(rw).collect()
         ) == [4]
 
+    def test_compaction_below_the_range_passes_through(self, spark, store):
+        """A compaction inside the range that rewrote only files added at
+        or below `after` moves no rows into or out of the delta."""
+        store.write_batch(batch(spark, [1, 2]))
+        store.write_batch(batch(spark, [3]))
+        v2 = store.latest_commit_version()
+        store.compact(min_files=1, target_rows_per_file=10)
+        store.write_batch(batch(spark, [14]), force=True)
+        assert sorted(
+            r.height for r in store.appended_between(v2).collect()
+        ) == [14]
+
     def test_refuses_pruned_entries_and_bad_range(self, spark, store):
         store.write_batch(batch(spark, [1]))
         store.write_batch(batch(spark, [2]))
@@ -1063,10 +1092,32 @@ class TestMaterializedAggregate:
         before, v = self._got(spark, dest), applied_version(dest)
         # compact is a row-preserving band swap: the aggregate is
         # unaffected and no rebuild (floor jump) happens
-        store.compact()
+        store.compact(min_files=1)
+        assert store.latest_commit_version() > v  # a compact commit
         self._run(spark, str(store.root), dest, ck)
         assert self._got(spark, dest) == before == self._expect(store)
         assert applied_version(dest) == v
+
+    def test_catchup_lagging_behind_compaction_rebuilds(
+        self, spark, store, tmp_path
+    ):
+        """A compaction that merged away append files the aggregate has
+        not folded yet forces a rebuild instead of a read of the deleted
+        files (PATH_NOT_FOUND); the result equals a fresh maintainer's."""
+        from fluxdb_spark.streaming.materialize import applied_version
+
+        dest, ck = str(tmp_path / "agg"), str(tmp_path / "ck")
+        store.write_batch(batch(spark, [1, 2]))
+        store.write_batch(batch(spark, [3], tablet="other"))
+        self._run(spark, str(store.root), dest, ck)
+        store.write_batch(batch(spark, [4, 5]))
+        store.compact(min_files=1)
+        self._run(spark, str(store.root), dest, ck)
+        fresh = str(tmp_path / "fresh")
+        self._run(spark, str(store.root), fresh, str(tmp_path / "ck2"))
+        assert self._got(spark, dest) == self._got(spark, fresh)
+        assert self._got(spark, dest) == self._expect(store)
+        assert applied_version(dest) == store.latest_commit_version()
 
     def test_rejects_non_algebraic_merge(self, spark, store, tmp_path):
         from fluxdb_spark.streaming.materialize import materialize_aggregate

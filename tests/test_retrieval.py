@@ -151,6 +151,50 @@ class TestRowwiseMaterializer:
             spark, {**surviving, 20: DOCS2[3]}
         )
 
+    def test_catchup_lagging_behind_compaction_rebuilds(
+        self, spark, store, tmp_path
+    ):
+        """A compaction that merged away append files the index has not
+        folded yet forces a rebuild: the delta's source files are gone,
+        so reading them would fail (PATH_NOT_FOUND). The rebuilt rows
+        equal those of a fresh catch-up over the same store."""
+        dest, ck = str(tmp_path / "sigs"), str(tmp_path / "ck")
+        store.write_batch(doc_rows(spark, DOCS1))
+        rt.refresh(spark, str(store.root), dest, rt.minhash_transform(), ck)
+        store.write_batch(doc_rows(spark, DOCS2))
+        store.compact(min_files=1)
+        got = rt.refresh(
+            spark, str(store.root), dest, rt.minhash_transform(), ck
+        )
+        fresh = rt.refresh(
+            spark,
+            str(store.root),
+            str(tmp_path / "fresh"),
+            rt.minhash_transform(),
+            str(tmp_path / "ck2"),
+        )
+        assert got.exceptAll(fresh).count() == 0
+        assert fresh.exceptAll(got).count() == 0
+        assert self._sigs(spark, dest) == _sig_recompute(
+            spark, {**DOCS1, **DOCS2}
+        )
+
+    def test_compaction_of_applied_files_is_a_no_op(
+        self, spark, store, tmp_path
+    ):
+        from fluxdb_spark.streaming.materialize import applied_version
+
+        dest, ck = str(tmp_path / "sigs"), str(tmp_path / "ck")
+        store.write_batch(doc_rows(spark, DOCS1))
+        store.write_batch(doc_rows(spark, DOCS2))
+        rt.refresh(spark, str(store.root), dest, rt.minhash_transform(), ck)
+        dirs, floor = _commit_dirs(dest), applied_version(dest)
+        store.compact(min_files=1)
+        assert store.latest_commit_version() > floor  # a compact commit
+        rt.refresh(spark, str(store.root), dest, rt.minhash_transform(), ck)
+        assert _commit_dirs(dest) == dirs
+        assert applied_version(dest) == floor
+
     def test_crash_between_data_and_floor_replays_idempotently(
         self, spark, store, tmp_path
     ):
@@ -269,6 +313,26 @@ class TestRowwiseMaterializer:
         with open(_state_path(dest), "w") as f:
             _json.dump(state, f)
         assert rt.read_derived(spark, dest) is not None
+
+
+    def test_corrupt_state_file_raises_not_empty(
+        self, spark, store, tmp_path
+    ):
+        """An unreadable state file must not read as "no state yet":
+        that would make read_derived return no rows at all."""
+        from fluxdb_spark.streaming.materialize import _state_path
+
+        dest, ck = str(tmp_path / "sigs"), str(tmp_path / "ck")
+        store.write_batch(doc_rows(spark, DOCS1))
+        rt.refresh(spark, str(store.root), dest, rt.minhash_transform(), ck)
+        with open(_state_path(dest), "w") as f:
+            f.write('{"applied_version": 1, "form')
+        with pytest.raises(ValueError, match="corrupt"):
+            rt.read_derived(spark, dest)
+        with pytest.raises(ValueError, match="corrupt"):
+            rt.refresh(
+                spark, str(store.root), dest, rt.minhash_transform(), ck
+            )
 
 
 class TestFoldCompaction:
