@@ -14,7 +14,10 @@ key trick (singlet.go:222-242) is unnecessary because "latest <= H" is an
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # The single canonical change-log relation (SURVEY.md §1.3).
 CHANGELOG_SCHEMA = T.StructType(
@@ -65,3 +68,28 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 CHANGELOG_COLUMNS = [f.name for f in CHANGELOG_SCHEMA.fields]
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """DataFrame over driver-held `rows` (tuples in `schema` field order),
+    planned as a JVM `LocalRelation`.
+
+    Every row first passes PySpark's own verifier — the check
+    `createDataFrame(rows, schema)` runs — so the same rows are rejected
+    with the same error classes (Arrow alone would take a float 1.0 as a
+    long). The rows then travel as one Arrow table. A list-built frame
+    is instead a `LogicalRDD` over pickled rows, and every job that scans
+    it starts Python workers again to unpickle them: twice per flush
+    (the bounds agg and the staged write), once per overlay-aware read."""
+    verify = T._make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

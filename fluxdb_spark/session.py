@@ -29,6 +29,16 @@ def spread(df, min_partitions: int | None = None):
     return df
 
 
+def _driver_memory() -> str:
+    """`SPARK_DRIVER_MEMORY`, else ¾ of the host's physical memory
+    (MemTotal), capped at 48g — a fixed 48g overcommits a smaller box."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, total * 3 // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "fluxdb_spark",
     master: str | None = None,
@@ -54,7 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Older driver-generated events.parquet used TIMESTAMP(NANOS), which

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
+from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
 
 
 class WriteConsistencyError(RuntimeError):
@@ -567,6 +567,21 @@ class CommitLog:
 _READ_SCHEMA = T.StructType(
     CHANGELOG_SCHEMA.fields
     + [T.StructField("height_band", T.LongType(), True)]
+)
+
+# one row per commit-log entry (ChangelogStore.history)
+_HISTORY_SCHEMA = T.StructType(
+    [
+        T.StructField("version", T.LongType()),
+        T.StructField("action", T.StringType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("shard", T.StringType()),
+        T.StructField("hi", T.LongType()),
+        T.StructField("files_added", T.IntegerType()),
+        T.StructField("files_removed", T.IntegerType()),
+        T.StructField("healed", T.BooleanType()),
+        T.StructField("ts", T.DoubleType()),
+    ]
 )
 
 
@@ -2203,7 +2218,7 @@ class ChangelogStore:
         else:
             df = self._backend.committed_relation(_READ_SCHEMA, self.checkpoint)
         if df is None:
-            return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
+            return local_frame(self.spark, [], CHANGELOG_SCHEMA)
         if max_height is not None:
             df = df.filter(
                 (F.col("height_band") <= max_height // self.height_band)
@@ -2245,7 +2260,7 @@ class ChangelogStore:
             )
         _top, files = delta
         if not files:
-            return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
+            return local_frame(self.spark, [], CHANGELOG_SCHEMA)
         return read_changelog_files(self.spark, self.root, files)
 
     def history(self) -> DataFrame:
@@ -2267,12 +2282,7 @@ class ChangelogStore:
             )
             for e in self._backend.commit_log.entries()
         ]
-        return self.spark.createDataFrame(
-            rows,
-            "version LONG, action STRING, kind STRING, shard STRING, "
-            "hi LONG, files_added INT, files_removed INT, healed BOOLEAN, "
-            "ts DOUBLE",
-        )
+        return local_frame(self.spark, rows, _HISTORY_SCHEMA)
 
     def latest_commit_version(self) -> int:
         return self._backend.commit_log.latest_version()
@@ -2377,7 +2387,7 @@ class IndexStore:
             df.isEmpty()  # force file listing so an empty dir falls back
             return df
         except Exception:
-            return self.spark.createDataFrame([], TABLET_INDEX_SCHEMA)
+            return local_frame(self.spark, [], TABLET_INDEX_SCHEMA)
 
     def prune(self, prune_frequency: int) -> int:
         """I6 maintenance — physically remove superseded snapshots, keeping
@@ -2483,9 +2493,16 @@ class IndexStore:
                 )
                 rebuilt = idx if rebuilt is None else rebuilt.unionByName(idx)
         untouched = current.join(
-            self.spark.createDataFrame(
-                entries, "collection string, tablet_id string, "
-                "snapshot_height long"
+            local_frame(
+                self.spark,
+                entries,
+                T.StructType(
+                    [
+                        T.StructField("collection", T.StringType()),
+                        T.StructField("tablet_id", T.StringType()),
+                        T.StructField("snapshot_height", T.LongType()),
+                    ]
+                ),
             ),
             on=["collection", "tablet_id", "snapshot_height"],
             how="left_anti",

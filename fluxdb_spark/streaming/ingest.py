@@ -14,6 +14,11 @@ driver-side ForkDB, exposed as a small DataFrame that read plans union on
 top of durable data. The overlay never touches storage — exactly the
 reference's design (no KV write for reversible data, pipeline.go:163-169).
 
+Both driver-held row sets — a flush batch and the overlay — are built by
+`schema.local_frame` as Arrow-backed `LocalRelation`s, so the jobs that scan
+them (the flush's bounds agg and staged write, every overlay-aware read)
+start no Python worker.
+
 Serving reads go through `FluxEngine` below, the analog of the reference's
 FluxDB facade (fluxdb.go:104-154): `speculative_writes(height)` +
 temporal operators.
@@ -23,9 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fluxdb_spark.forkdb import BlockRef, ForkDB, SpeculativeBlock
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
+from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
 from fluxdb_spark.store import ChangelogStore
 
 FLUSH_ROWS = 5_000  # reference pipeline.go:374-382
@@ -135,7 +141,7 @@ class IngestPipeline:
         index builds the batch's mutation counts made due."""
         if self._pending_hi is None:
             return
-        df = self.store.spark.createDataFrame(self._pending, CHANGELOG_SCHEMA)
+        df = local_frame(self.store.spark, self._pending, CHANGELOG_SCHEMA)
         if self.indexer is not None:
             from collections import Counter
 
@@ -195,7 +201,7 @@ class IngestPipeline:
             rows.extend(blk.rows)
         if not rows:
             return None
-        return self.store.spark.createDataFrame(rows, CHANGELOG_SCHEMA)
+        return local_frame(self.store.spark, rows, CHANGELOG_SCHEMA)
 
     # --- Structured Streaming binding --------------------------------------
 
@@ -499,11 +505,18 @@ class FluxEngine:
         if spec is not None:
             log = log.unionByName(spec)
         ckpt = self.store.checkpoint()
-        ckpt_df = self.spark.createDataFrame(
+        ckpt_df = local_frame(
+            self.spark,
             []
             if ckpt is None
             else [(ckpt.height, ckpt.block_id, ckpt.block_num)],
-            "height LONG, block_id STRING, block_num LONG",
+            T.StructType(
+                [
+                    T.StructField("height", T.LongType()),
+                    T.StructField("block_id", T.StringType()),
+                    T.StructField("block_num", T.LongType()),
+                ]
+            ),
         )
         views = {
             f"{prefix}_changelog": log,

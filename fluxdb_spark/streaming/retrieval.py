@@ -40,7 +40,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from fluxdb_spark.schema import local_frame
 from fluxdb_spark.session import spread
 from fluxdb_spark.store import ChangelogStore, CommitLog, read_changelog_files
 from fluxdb_spark.streaming.follow import stream_commits
@@ -48,6 +50,27 @@ from fluxdb_spark.streaming.materialize import (
     _recover,
     _state_path,
     applied_version,
+)
+
+# one-row probe relations the serving routes build per request
+_VECTOR_PROBE = T.StructType(
+    [
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+    ]
+)
+_ID_PROBE = T.StructType([T.StructField("vec_id", T.LongType())])
+_TEXT_PROBE = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
+)
+_SPAN_PROBE = T.StructType(
+    [
+        T.StructField("probe_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
 )
 
 
@@ -1010,9 +1033,8 @@ class RetrievalService:
         if derived is None:
             raise ValueError("ANN index is empty — run index-retrieval")
         buckets = lsh_live_buckets(derived)
-        probe = self.spark.createDataFrame(
-            [(-1, [float(x) for x in vector])],
-            "vec_id long, embedding array<double>",
+        probe = local_frame(
+            self.spark, [(-1, [float(x) for x in vector])], _VECTOR_PROBE
         )
         return lsh_topk_from_buckets(
             buckets, probe, k=k, **self.ann_params
@@ -1068,9 +1090,8 @@ class RetrievalService:
                 "rebuild it (index-retrieval --kind kmeans on a fresh dest)"
             )
         asg = lww_latest(derived, ["vec_id"])
-        probe = self.spark.createDataFrame(
-            [(-1, [float(x) for x in vector])],
-            "vec_id long, embedding array<double>",
+        probe = local_frame(
+            self.spark, [(-1, [float(x) for x in vector])], _VECTOR_PROBE
         )
         return ivf_topk_from_assignments(
             asg, model["centroids"], probe, k=k, n_probe=n_probe
@@ -1098,9 +1119,7 @@ class RetrievalService:
             raise ValueError("minhash index is empty — run index-retrieval")
         sigs = lww_latest(derived, ["doc_id"])
         probe = minhash_signatures(
-            self.spark.createDataFrame(
-                [(-1, str(text))], "doc_id long, text string"
-            )
+            local_frame(self.spark, [(-1, str(text))], _TEXT_PROBE)
         )
         out = (
             minhash_probe_candidates(sigs, probe)
@@ -1133,9 +1152,7 @@ class RetrievalService:
         qz = lww_latest(derived, ["vec_id"]).select(
             "vec_id", "q8", "scale_e9"
         )
-        probe = self.spark.createDataFrame(
-            [(int(vec_id),)], "vec_id long"
-        )
+        probe = local_frame(self.spark, [(int(vec_id),)], _ID_PROBE)
         return quantized_topk_from_table(qz, probe, k=k)
 
     def binary_topk(
@@ -1169,9 +1186,7 @@ class RetrievalService:
         )
         bz = lww_latest(bderived, ["vec_id"]).select("vec_id", *word_cols)
         qz = lww_latest(qderived, ["vec_id"]).select("vec_id", "q8")
-        probe = self.spark.createDataFrame(
-            [(int(vec_id),)], "vec_id long"
-        )
+        probe = local_frame(self.spark, [(int(vec_id),)], _ID_PROBE)
         return binary_topk_from_tables(
             bz, qz, probe, k=k, rerank=rerank, dim=32 * len(word_cols)
         )
@@ -1210,9 +1225,7 @@ class RetrievalService:
             .filter(F.col("h").isNotNull())
             .select("h")
         )
-        probe = self.spark.createDataFrame(
-            [(0, text)], "probe_id long, text string"
-        )
+        probe = local_frame(self.spark, [(0, text)], _SPAN_PROBE)
         occ = (
             probe.select(
                 "probe_id",
@@ -1245,9 +1258,7 @@ class RetrievalService:
             raise ValueError(
                 "BPE index has no trained merges — run index-retrieval"
             )
-        probe = self.spark.createDataFrame(
-            [(0, str(text))], "doc_id long, text string"
-        )
+        probe = local_frame(self.spark, [(0, str(text))], _TEXT_PROBE)
         return encode_documents(probe, merges).select("n_tokens", "tokens")
 
     def pq_topk(self, vector: list[float], k: int = 10) -> DataFrame:
@@ -1270,9 +1281,8 @@ class RetrievalService:
         if derived is None:
             raise ValueError("PQ index is empty — run index-retrieval")
         codes = lww_latest(derived, ["vec_id"]).select("vec_id", "codes")
-        probe = self.spark.createDataFrame(
-            [(-1, [float(x) for x in vector])],
-            "vec_id long, embedding array<double>",
+        probe = local_frame(
+            self.spark, [(-1, [float(x) for x in vector])], _VECTOR_PROBE
         )
         return pq_topk_from_codes(
             codes, probe, books, k=k, dim=self.pq_dim

@@ -40,9 +40,11 @@ unbounded corpus; the driver-side collect is bounded by the same cap.
 
 Scale shape: each request is one `state_at`-class plan — height bands
 partition-prune the scan, the LWW fold is a combine-friendly max_by, the
-overlay union is a tiny in-memory relation — so the per-request cost is
-the store read itself; concurrent requests are independent Spark actions
-(scheduled FAIR across the handler threads).
+overlay union is a JVM `LocalRelation` built from the driver's ForkDB rows
+through Arrow (`schema.local_frame`; no Python worker runs to scan it) —
+so the per-request cost is the store read itself; concurrent requests
+are independent Spark actions (scheduled FAIR across the handler
+threads).
 """
 
 from __future__ import annotations

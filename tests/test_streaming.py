@@ -179,6 +179,84 @@ class TestEngineOverlay:
         assert engine.reversible_block("nope") is None
 
 
+class TestDriverRowsAsLocalRelation:
+    """Driver-held rows (a flush batch, the speculative overlay) are
+    planned as a JVM LocalRelation, so scanning them starts no Python
+    worker — and they are checked exactly like createDataFrame(list)."""
+
+    @pytest.fixture()
+    def engine(self, spark, tmp_path):
+        return FluxEngine(spark, str(tmp_path / "db"))
+
+    def test_flush_and_overlay_frames_have_no_python_rdd(
+        self, spark, engine, monkeypatch
+    ):
+        written = []
+        write_batch = engine.store.write_batch
+        monkeypatch.setattr(
+            engine.store,
+            "write_batch",
+            lambda df, **kw: written.append(df) or write_batch(df, **kw),
+        )
+        p = engine.pipeline
+        p.process_new_block("b1", 1, "", [clrow("tbl", 1, "a", "v1", "b1")])
+        p.process_irreversible("b1", 1)
+        p.flush()
+        p.process_new_block("b2", 2, "b1", [clrow("tbl", 2, "a", "v2", "b2")])
+        spec = p.speculative_writes()
+        assert len(written) == 1 and spec is not None
+        for df in (written[0], spec):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" not in plan, plan
+            assert "LocalRelation" in plan, plan
+        assert [r.value for r in spec.collect()] == ["v2"]
+        assert engine.store.checkpoint().height == 1
+
+    @pytest.mark.parametrize(
+        "bad",
+        [
+            # None in a non-nullable column
+            ("tst", None, 1, "k", "v", False, "b1", 1),
+            # a float height: Arrow alone would cast 1.0 to a long
+            ("tst", "tbl", 1.0, "k", "v", False, "b1", 1),
+            # an int is_deletion
+            ("tst", "tbl", 1, "k", "v", 1, "b1", 1),
+        ],
+        ids=["null-in-non-nullable", "float-height", "int-is-deletion"],
+    )
+    def test_rejects_what_create_dataframe_rejects(self, spark, bad):
+        from pyspark.errors import PySparkException
+
+        from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
+
+        with pytest.raises(PySparkException) as want:
+            spark.createDataFrame([bad], CHANGELOG_SCHEMA)
+        with pytest.raises(PySparkException) as got:
+            local_frame(spark, [bad], CHANGELOG_SCHEMA)
+        assert type(got.value) is type(want.value)
+        assert got.value.getCondition() == want.value.getCondition()
+
+    @pytest.mark.parametrize(
+        "rows",
+        [
+            [
+                clrow("tbl", 1, "a", "v1", "b1"),
+                clrow("tbl", 2, "a", "", "b2"),  # tombstone
+                ("tst", "tbl", 3, "b", None, True, None, None),
+            ],
+            [],
+        ],
+        ids=["nulls-and-tombstones", "empty"],
+    )
+    def test_collects_like_the_list_path(self, spark, rows):
+        from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
+
+        got = local_frame(spark, rows, CHANGELOG_SCHEMA)
+        want = spark.createDataFrame(rows, CHANGELOG_SCHEMA)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+
+
 class TestStatefulSessionize:
     """applyInPandasWithState sessionization (streaming/stateful.py)."""
 
