@@ -81,8 +81,8 @@ def local_frame(
     with the same error classes (Arrow alone would take a float 1.0 as a
     long). The rows then travel as one Arrow table. A list-built frame
     is instead a `LogicalRDD` over pickled rows, and every job that scans
-    it starts Python workers again to unpickle them: twice per flush
-    (the bounds agg and the staged write), once per overlay-aware read."""
+    it starts Python workers again to unpickle them: once per flush (the
+    staged write) and once per overlay-aware read."""
     verify = T._make_type_verifier(schema)
     for row in rows:
         verify(row)

@@ -6,10 +6,9 @@ transactional-table behaviors a Delta append would provide. The physical
 protocol is isolated behind the `StoreBackend` seam (the analog of the
 reference's store DSN, store.go:31-39) with `FileChangelogBackend` as
 the only concrete backend — a transactional format drops in by
-implementing `append_and_commit` (where the whole stage/manifest/move
-sequence collapses to one native transactional write),
-`committed_relation`, and `recover`. What the reference guarantees and
-we preserve:
+implementing `stage` / `commit` / `discard` (the data files of a
+transaction, then its log entry), `committed_relation`, and `recover`.
+What the reference guarantees and we preserve:
 
 - **monotonic height guard** (reference isNextBlock, write.go:331-347): a
   batch at height H is rejected unless last_height >= H-1. Heights at or
@@ -21,15 +20,17 @@ we preserve:
   same-height rewrite of durable data cannot legitimately occur;
 - **checkpoint written with the data** (reference flushes the checkpoint
   table last in the same batch, store/kv/store.go:418-424): the batch is
-  staged to a side directory, a MANIFEST naming every target file is
-  written atomically, the files are moved into the band directories, and
-  only then does the checkpoint advance — the checkpoint write IS the
-  commit point, exactly like the reference's same-batch atomicity. A crash
-  anywhere before the checkpoint leaves a manifest whose `hi` exceeds the
-  checkpoint; `recover()` rolls the torn batch back (deletes the listed
-  files) so the idempotent replay re-writes it whole. Without the
-  manifest, a torn multi-file move would leave orphan rows above the
-  checkpoint that replay cannot dedup;
+  staged to a side directory by one Spark write that also observes its
+  bounds (lo, hi, last block, row count), the height guard is checked on
+  those bounds (a rejected stage is deleted), a MANIFEST naming every
+  target file is written atomically, the files are moved into the band
+  directories, and only then does the checkpoint advance — the
+  checkpoint write IS the commit point, exactly like the reference's
+  same-batch atomicity. A crash anywhere before the checkpoint leaves a
+  manifest whose `hi` exceeds the checkpoint; `recover()` rolls the torn
+  batch back (deletes the listed files) so the idempotent replay
+  re-writes it whole. Without the manifest, a torn multi-file move would
+  leave orphan rows above the checkpoint that replay cannot dedup;
 - **per-shard checkpoints** (`shard-NNN`, reference read.go:454-464) for
   parallel backfill, reconciled into the global one (write.go:82-194).
 
@@ -62,8 +63,9 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -280,7 +282,7 @@ class CommitLog:
     shards on top of the per-stream writer leases.
 
     The log is commit METADATA, not the commit point: an append batch is
-    committed by its checkpoint advance (`append_and_commit`) and its log
+    committed by its checkpoint advance (`StoreBackend.commit`) and its log
     entry lands immediately after; `recover()` heals the entry for a
     writer that crashed in the gap (the surviving committed manifest
     names the batch). Entry shape:
@@ -613,6 +615,16 @@ def read_changelog_files(
     )
 
 
+@dataclass(frozen=True)
+class StagedBatch:
+    """A batch `StoreBackend.stage` wrote but no reader sees yet: where it
+    lies and the (staged file, target file) moves its commit makes."""
+
+    batch_id: str
+    path: str
+    moves: list
+
+
 class StoreBackend:
     """The physical append/visibility/recovery seam — the analog of the
     reference's store DSN (store.go:31-39, `badger://` local vs Bigtable
@@ -623,14 +635,20 @@ class StoreBackend:
 
     The contract every backend must keep:
 
-    - `append_and_commit` durably writes the batch, invokes `advance`
-      (the checkpoint write) at the COMMIT POINT, and guarantees a crash
-      anywhere leaves either nothing visible or everything + checkpoint.
-      On a transactional table format (Delta/Iceberg) this whole method
-      collapses to one native transactional append with the checkpoint
-      folded in (e.g. a txn app-id version); the parquet implementation
-      below re-creates that with stage -> manifest -> move ->
-      checkpoint -> cleanup.
+    - `stage(clustered, batch_id)` durably writes the batch where no
+      reader sees it and returns a handle, or None when it wrote no row
+      (an empty batch or a full replay). ChangelogStore reads the batch
+      bounds, which the write observed, and checks its height guard
+      between the two steps below.
+    - `commit(staged, bounds, shard, advance)` makes the staged rows
+      visible and invokes `advance` (the checkpoint write) at the COMMIT
+      POINT; a crash anywhere leaves either nothing visible or
+      everything + checkpoint. `discard(staged)` drops a batch the
+      guard rejected. On a transactional table format (Delta/Iceberg)
+      `stage` writes the data files of a transaction and `commit` is its
+      log entry with the checkpoint folded in (e.g. a txn app-id
+      version); the parquet implementation below re-creates that with
+      stage -> manifest -> move -> checkpoint -> cleanup.
     - `committed_relation` returns only rows whose batch reached its
       commit point (snapshot isolation against in-flight writers).
     - `recover` rolls back (or completes) whatever a crash left behind.
@@ -640,7 +658,13 @@ class StoreBackend:
     OPTIMIZE/VACUUM) and lives with the concrete backend.
     """
 
-    def append_and_commit(self, clustered, batch_id, bounds, shard, advance):
+    def stage(self, clustered, batch_id):
+        raise NotImplementedError
+
+    def commit(self, staged, bounds, shard, advance):
+        raise NotImplementedError
+
+    def discard(self, staged):
         raise NotImplementedError
 
     def committed_relation(self, read_schema, checkpoint_of):
@@ -729,7 +753,7 @@ class FileChangelogBackend(StoreBackend):
     def _is_data_file(self, fname: str) -> bool:
         return fname.endswith(self.data_suffix)
 
-    def append_and_commit(self, clustered, batch_id, bounds, shard, advance):
+    def stage(self, clustered, batch_id):
         stage = os.path.join(self.staging_dir, f"batch-{batch_id}")
         writer = (
             clustered.sortWithinPartitions("collection", "tablet_id", "height")
@@ -740,11 +764,12 @@ class FileChangelogBackend(StoreBackend):
                 ),
             )
             .write.mode("overwrite")
+            .option("maxRecordsPerFile", TARGET_FILE_ROWS)
             .partitionBy("collection", "height_band")
         )
         self._write(writer, stage)
-        # manifest BEFORE any file reaches the band directories: lists every
-        # target path, so recover() can roll a torn move back in full
+        # every target path, for the manifest commit() writes before any
+        # file reaches the band directories
         moves = []
         for dirpath, _dirnames, filenames in os.walk(stage):
             rel = os.path.relpath(dirpath, stage)
@@ -759,6 +784,19 @@ class FileChangelogBackend(StoreBackend):
                         ),
                     )
                 )
+        staged = StagedBatch(batch_id, stage, moves)
+        if not moves:
+            self.discard(staged)
+            return None
+        return staged
+
+    def discard(self, staged):
+        shutil.rmtree(staged.path, ignore_errors=True)
+
+    def commit(self, staged, bounds, shard, advance):
+        batch_id, moves = staged.batch_id, staged.moves
+        # manifest BEFORE any file reaches the band directories: lists every
+        # target path, so recover() can roll a torn move back in full
         manifest = os.path.join(self.manifest_dir, f"batch-{batch_id}.json")
         tmp = manifest + ".tmp"
         with open(tmp, "w") as f:
@@ -768,7 +806,7 @@ class FileChangelogBackend(StoreBackend):
                     "shard": shard,
                     "batch_id": batch_id,
                     "targets": [dst for _src, dst in moves],
-                    "staging": stage,
+                    "staging": staged.path,
                 },
                 f,
             )
@@ -799,7 +837,7 @@ class FileChangelogBackend(StoreBackend):
             os.remove(manifest)
         except FileNotFoundError:
             pass
-        shutil.rmtree(stage, ignore_errors=True)
+        self.discard(staged)
 
     def _uncommitted_targets(self, checkpoint_of) -> set[str]:
         """Target files of batches whose commit point (the checkpoint
@@ -1241,6 +1279,15 @@ def _zorder_key(key_col: str, height_col: str) -> "F.Column":
 
 DEFAULT_HEIGHT_BAND = 100_000
 
+# rows per data file that appends, compaction, retention rebases and DML
+# rewrites aim for
+TARGET_FILE_ROWS = 500_000
+
+
+def _n_files(n_rows: int) -> int:
+    """Files for `n_rows` rows at TARGET_FILE_ROWS each, 1 to 64."""
+    return max(1, min(64, -(-n_rows // TARGET_FILE_ROWS)))
+
 
 class ChangelogStore:
     def __init__(
@@ -1439,6 +1486,14 @@ class ChangelogStore:
         module docstring). The remaining batch must start at checkpoint+1
         (no holes).
 
+        Like the reference, which checks the guard and writes the
+        checkpoint from the batch it already holds, the batch is read
+        once: its bounds (lo, hi, last block, row count) are an
+        `Observation` on the staged write itself, checked after staging
+        and before the manifest — a rejected batch leaves nothing behind.
+        The write is one task with no shuffle, so the whole batch costs
+        one Spark job; the writer cuts files at TARGET_FILE_ROWS rows.
+
         Runs under the stream's writer lease: the checkpoint read, the
         data write, and the checkpoint advance are one critical section
         per (global | shard) stream.
@@ -1452,48 +1507,44 @@ class ChangelogStore:
         ckpt = self.checkpoint(shard)
         if ckpt is not None:
             rows = rows.filter(F.col("height") > F.lit(ckpt.height))
-        bounds = rows.agg(
+        # File sizing: streaming micro-batches (reference flushes at 5,000
+        # rows, pipeline.go:374-382) land as one height-sorted file per
+        # band; large batches as TARGET_FILE_ROWS-row files, which the
+        # stage's (collection, tablet_id, height) sort makes contiguous
+        # tablet ranges, so per-tablet temporal reads touch few files.
+        # One task and no shuffle, so the write is the batch's only job.
+        clustered = rows.coalesce(1)
+        self._maybe_size_stats(clustered)
+        obs = Observation()
+        observed = clustered.observe(
+            obs,
             F.min("height").alias("lo"),
             F.max("height").alias("hi"),
             F.max_by("block_id", F.col("height")).alias("block_id"),
             F.max("block_num").alias("block_num"),
             F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if bounds.lo is None:
-            return ckpt if ckpt is not None else Checkpoint(-1, None, None)
-        if not force and ckpt is not None and bounds.lo > ckpt.height + 1:
-            # reference isNextBlock (write.go:331-347): lastHeight must be
-            # >= writeHeight - 1 — otherwise there is a hole.
-            raise WriteConsistencyError(
-                f"hole detected: batch starts at height {bounds.lo} but "
-                f"checkpoint is at {ckpt.height}"
-            )
-        # File sizing: streaming micro-batches (reference flushes at 5,000
-        # rows, pipeline.go:374-382) land as one height-sorted file; large
-        # backfill batches scale out to ~500K-row files clustered by
-        # tablet_id so per-tablet temporal reads touch few files.
-        n_files = max(1, min(64, -(-int(bounds.n) // 500_000)))
-        clustered = (
-            rows.repartition(n_files, "tablet_id")
-            if n_files > 1
-            else rows.repartition(1)
         )
-        self._maybe_size_stats(clustered)
-        meta_path = os.path.join(self.root, "_meta.json")
-        if not os.path.exists(meta_path):
-            tmp_meta = meta_path + ".tmp"
-            with open(tmp_meta, "w") as f:
-                json.dump(
-                    {
-                        "height_band": self.height_band,
-                        "data_format": self._backend.data_format,
-                    },
-                    f,
+        staged = self._backend.stage(observed, uuid.uuid4().hex)
+        if staged is None:
+            # no row above the checkpoint: an empty batch or a full replay
+            # (decided from the files: a frame with no partitions may
+            # report no observed row at all)
+            return ckpt if ckpt is not None else Checkpoint(-1, None, None)
+        try:
+            bounds = Row(**obs.get)
+            if not force and ckpt is not None and bounds.lo > ckpt.height + 1:
+                # reference isNextBlock (write.go:331-347): lastHeight must
+                # be >= writeHeight - 1 — otherwise there is a hole.
+                raise WriteConsistencyError(
+                    f"hole detected: batch starts at height {bounds.lo} but "
+                    f"checkpoint is at {ckpt.height}"
                 )
-            os.replace(tmp_meta, meta_path)
-        self._backend.append_and_commit(
-            clustered,
-            uuid.uuid4().hex,
+            self._write_meta()
+        except BaseException:
+            self._backend.discard(staged)
+            raise
+        self._backend.commit(
+            staged,
             bounds,
             shard,
             advance=lambda: self._write_checkpoint(
@@ -1501,6 +1552,23 @@ class ChangelogStore:
             ),
         )
         return Checkpoint(bounds.hi, bounds.block_id, bounds.block_num)
+
+    def _write_meta(self) -> None:
+        """Record the physical layout (band size, file format) once, when
+        the first batch passes the height guard."""
+        meta_path = os.path.join(self.root, "_meta.json")
+        if os.path.exists(meta_path):
+            return
+        tmp_meta = meta_path + ".tmp"
+        with open(tmp_meta, "w") as f:
+            json.dump(
+                {
+                    "height_band": self.height_band,
+                    "data_format": self._backend.data_format,
+                },
+                f,
+            )
+        os.replace(tmp_meta, meta_path)
 
     def _maybe_size_stats(self, rows: DataFrame) -> None:
         """Per-tablet write-size observability (reference write.go:274-329,
@@ -1633,7 +1701,7 @@ class ChangelogStore:
             # file sizing like write_batch: the live tail is bounded by the
             # doomed row count, so a huge expired region still writes
             # through many tasks, clustered by tablet for later pruning
-            n_out = max(1, min(64, -(-n_doomed // 500_000)))
+            n_out = _n_files(n_doomed)
             target = os.path.join(
                 self._data_dir,
                 f"collection={coll}",
@@ -1805,7 +1873,7 @@ class ChangelogStore:
 
     def compact(
         self,
-        target_rows_per_file: int = 500_000,
+        target_rows_per_file: int = TARGET_FILE_ROWS,
         min_files: int = 4,
         zorder: bool = False,
     ) -> dict:
@@ -1982,10 +2050,6 @@ class ChangelogStore:
         ops tool for judging a layout: after `compact(zorder=True)`, a
         (primary_key, height) point probe should admit a small fraction
         of files; the linear layout admits every file of the tablet."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError as exc:  # pragma: no cover - baked into image
-            raise RuntimeError("file_layout_stats requires pyarrow") from exc
         out: list[dict] = []
         coll_dir = os.path.join(self._data_dir, f"collection={collection}")
         if not os.path.isdir(coll_dir):
@@ -2125,7 +2189,7 @@ class ChangelogStore:
                 )
             out = out.drop("collection", "height_band")
             n_kept = out.count()
-            n_out = max(1, min(64, -(-n_kept // 500_000)))
+            n_out = _n_files(n_kept)
             swap_id = uuid.uuid4().hex
             new = os.path.join(self._staging_dir, f"rewrite-{swap_id}")
             old = os.path.join(self._staging_dir, f"rewrite-{swap_id}-old")
@@ -2346,8 +2410,10 @@ class IndexStore:
     # "index singlet pretty heavy" warning)
     BIG_INDEX_BYTES = 25 * 1000 * 1000
 
-    def write(self, index_df: DataFrame) -> None:
-        """Append freshly built snapshot rows (build_tablet_index output).
+    def write(self, index_df: DataFrame) -> int:
+        """Append freshly built snapshot rows (build_tablet_index output)
+        and return how many were written — summed from the footers of the
+        files this write created, so the caller needs no read-back job.
 
         Warns when the write lands more than BIG_INDEX_BYTES on disk —
         the reference's "index singlet pretty heavy" guard (indexing.go:
@@ -2362,10 +2428,9 @@ class IndexStore:
             set(os.listdir(self._dir)) if os.path.isdir(self._dir) else set()
         )
         index_df.write.mode("append").parquet(self._dir)
+        new = [fn for fn in os.listdir(self._dir) if fn not in before]
         added = 0
-        for fn in os.listdir(self._dir):
-            if fn in before:
-                continue
+        for fn in new:
             try:
                 added += os.path.getsize(os.path.join(self._dir, fn))
             except OSError:
@@ -2378,6 +2443,11 @@ class IndexStore:
                 self.BIG_INDEX_BYTES,
                 self._dir,
             )
+        return sum(
+            pq.ParquetFile(os.path.join(self._dir, fn)).metadata.num_rows
+            for fn in new
+            if fn.endswith(".parquet")
+        )
 
     def read(self) -> DataFrame:
         from fluxdb_spark.schema import TABLET_INDEX_SCHEMA

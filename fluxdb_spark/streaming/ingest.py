@@ -16,8 +16,8 @@ reference's design (no KV write for reversible data, pipeline.go:163-169).
 
 Both driver-held row sets — a flush batch and the overlay — are built by
 `schema.local_frame` as Arrow-backed `LocalRelation`s, so the jobs that scan
-them (the flush's bounds agg and staged write, every overlay-aware read)
-start no Python worker.
+them (the flush's one staged write, every overlay-aware read) start no
+Python worker.
 
 Serving reads go through `FluxEngine` below, the analog of the reference's
 FluxDB facade (fluxdb.go:104-154): `speculative_writes(height)` +
@@ -171,16 +171,7 @@ class IngestPipeline:
                 h,
                 collection=self.collection,
             )
-            self.index_store.write(idx)
-            n_rows = (
-                self.index_store.read()
-                .filter(
-                    (F.col("tablet_id") == tablet)
-                    & (F.col("snapshot_height") == h)
-                )
-                .count()
-            )
-            self.indexer.mark_indexed(tablet, n_rows)
+            self.indexer.mark_indexed(tablet, self.index_store.write(idx))
 
     # --- serve-side overlay ------------------------------------------------
 
@@ -211,8 +202,8 @@ class IngestPipeline:
         signal) and appended through the guarded write path."""
 
         def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            # Stays distributed: write_batch computes the batch bounds with
-            # an agg and appends executor-side — no driver collect.
+            # Stays distributed: write_batch observes the batch bounds on
+            # its executor-side append — no driver collect.
             ckpt = self.store.write_batch(batch_df)
             if ckpt.height >= 0:
                 self.forkdb.advance_lib(

@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import pytest
 
-from fluxdb_spark.store import ChangelogStore, WriteConsistencyError
+from fluxdb_spark.store import (
+    ChangelogStore,
+    Checkpoint,
+    WriteConsistencyError,
+)
 from fluxdb_spark.operators import state_at
 from tests.conftest import make_changelog
 
@@ -142,6 +146,33 @@ class TestIndexStore:
         for h in range(1, 8):
             ixs.write(build_tablet_index(log, "tbl", h, collection="tst"))
         return log, ixs
+
+    def test_write_returns_the_rows_it_wrote(self, spark, tmp_path):
+        from fluxdb_spark.operators.snapshot import build_tablet_index
+        from fluxdb_spark.store import IndexStore
+
+        log = make_changelog(
+            spark, [("tst", "tbl", h, f"k{h % 3}", "v") for h in range(1, 8)]
+        )
+        ixs = IndexStore(spark, str(tmp_path / "ix"))
+        idx = build_tablet_index(log, "tbl", 7, collection="tst")
+        assert ixs.write(idx) == 3 == idx.count()
+        assert ixs.write(idx.limit(0)) == 0
+        assert ixs.read().count() == 3
+
+    def test_write_of_a_zero_partition_frame_counts_zero(
+        self, spark, tmp_path
+    ):
+        from fluxdb_spark.schema import TABLET_INDEX_SCHEMA
+        from fluxdb_spark.store import IndexStore
+
+        empty = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), TABLET_INDEX_SCHEMA
+        )
+        assert empty.rdd.getNumPartitions() == 0
+        ixs = IndexStore(spark, str(tmp_path / "ix"))
+        assert ixs.write(empty) == 0
+        assert ixs.read().count() == 0
 
     def test_prune_physically_removes_snapshots(self, spark, tmp_path):
         log, ixs = self._seed(spark, tmp_path)
@@ -1161,7 +1192,8 @@ class TestStoreBackendSeam:
     (guards, leases, checkpoints) live on ChangelogStore; the physical
     append/visibility/recovery protocol lives behind StoreBackend, with
     parquet as the only concrete backend in this image. A transactional
-    format drops in by implementing the three protocol methods."""
+    format drops in by implementing the protocol methods (stage / commit /
+    discard, committed_relation, recover)."""
 
     def test_append_flows_through_backend_with_commit_callback(
         self, spark, tmp_path, monkeypatch
@@ -1171,17 +1203,21 @@ class TestStoreBackendSeam:
         st = ChangelogStore(spark, str(tmp_path / "db"))
         assert isinstance(st._backend, ParquetChangelogBackend)
         seen = {}
-        orig = st._backend.append_and_commit
+        orig = st._backend.commit
 
-        def spy(clustered, batch_id, bounds, shard, advance):
+        def spy(staged, bounds, shard, advance):
             seen["hi"] = int(bounds.hi)
             seen["shard"] = shard
-            # the checkpoint must not have advanced before the backend's
-            # commit point runs
-            seen["ckpt_before"] = st.checkpoint()
-            return orig(clustered, batch_id, bounds, shard, advance)
 
-        monkeypatch.setattr(st._backend, "append_and_commit", spy)
+            def spy_advance():
+                # the checkpoint must not have advanced before the
+                # backend's commit point runs
+                seen["ckpt_before"] = st.checkpoint()
+                advance()
+
+            return orig(staged, bounds, shard, spy_advance)
+
+        monkeypatch.setattr(st._backend, "commit", spy)
         st.write_batch(batch(spark, [1, 2]))
         assert seen == {"hi": 2, "shard": None, "ckpt_before": None}
         assert st.checkpoint().height == 2
@@ -1191,12 +1227,154 @@ class TestStoreBackendSeam:
 
         b = StoreBackend()
         for call in (
-            lambda: b.append_and_commit(None, "x", None, None, lambda: None),
+            lambda: b.stage(None, "x"),
+            lambda: b.commit(None, None, None, lambda: None),
+            lambda: b.discard(None),
             lambda: b.committed_relation(None, lambda s: None),
             lambda: b.recover(lambda s: None, lambda k: False),
         ):
             with pytest.raises(NotImplementedError):
                 call()
+
+
+def local_batch(spark, heights, tablet="tbl", pk="001"):
+    """`batch` as driver-held rows: a LocalRelation, as flushes build."""
+    from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
+
+    return local_frame(
+        spark,
+        [
+            ("tst", tablet, h, pk, f"v{h}", False, f"{h:08x}aa", h)
+            for h in heights
+        ],
+        CHANGELOG_SCHEMA,
+    )
+
+
+def _band_files(root):
+    """Data-file count per band directory of the store at `root`."""
+    import os
+    from collections import Counter
+
+    return Counter(
+        os.path.relpath(os.path.dirname(p), root)
+        for p in _parquet_files(os.path.join(root, "changelog"))
+    )
+
+
+class TestObservedBounds:
+    """write_batch reads its bounds (lo, hi, last block, n) from an
+    Observation on the staged write itself: a driver-held flush is one
+    Spark job, and the height guard runs after staging — so a rejected,
+    replayed or empty batch must leave nothing behind."""
+
+    def test_local_flush_is_one_spark_job(self, spark, tmp_path):
+        sc = spark.sparkContext
+        st = ChangelogStore(spark, str(tmp_path / "db"))
+        st.write_batch(local_batch(spark, range(1, 51)))  # warm, ckpt 50
+        df = local_batch(spark, range(51, 5_051))  # a 5,000-row flush
+        sc.setJobGroup("one-job-flush", "flush")
+        try:
+            ckpt = st.write_batch(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("one-job-flush")
+        assert len(jobs) == 1, jobs
+        assert ckpt == Checkpoint(5_050, f"{5_050:08x}aa", 5_050)
+        assert st.changelog().filter("height > 50").count() == 5_000
+
+    @pytest.mark.parametrize(
+        "heights, raises",
+        [([5, 6], True), ([1, 2, 3], False), ([], False)],
+        ids=["hole", "full-replay", "empty"],
+    )
+    def test_rejected_or_empty_batch_leaves_nothing(
+        self, spark, tmp_path, heights, raises
+    ):
+        import os
+
+        st = ChangelogStore(spark, str(tmp_path / "db"))
+        st.write_batch(local_batch(spark, [1, 2, 3]))
+        files = _band_files(st.root)
+        version = st.latest_commit_version()
+        if raises:
+            with pytest.raises(WriteConsistencyError, match="hole detected"):
+                st.write_batch(local_batch(spark, heights))
+        else:
+            assert st.write_batch(local_batch(spark, heights)).height == 3
+        assert not [
+            d for d in os.listdir(st._staging_dir) if d.startswith("batch-")
+        ]
+        assert not os.listdir(st._manifest_dir)
+        assert st.checkpoint().height == 3
+        assert _band_files(st.root) == files
+        assert st.latest_commit_version() == version
+
+    def test_zero_partition_batch_leaves_nothing(self, spark, tmp_path):
+        import os
+
+        from fluxdb_spark.schema import CHANGELOG_SCHEMA
+
+        empty = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), CHANGELOG_SCHEMA
+        )
+        assert empty.rdd.getNumPartitions() == 0
+        st = ChangelogStore(spark, str(tmp_path / "db"))
+        assert st.write_batch(empty) == Checkpoint(-1, None, None)
+        st.write_batch(local_batch(spark, [1, 2, 3]))
+        assert st.write_batch(empty).height == 3
+        assert not [
+            d for d in os.listdir(st._staging_dir) if d.startswith("batch-")
+        ]
+        assert not os.listdir(st._manifest_dir)
+        assert st.changelog().count() == 3
+
+    def test_local_and_distributed_input_store_the_same_rows(
+        self, spark, tmp_path
+    ):
+        from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
+
+        rows = [
+            ("tst", f"t{h % 3}", h, f"k{h % 7}", f"v{h}", h % 5 == 0,
+             f"{h:08x}aa", h)
+            for h in range(1, 35)
+        ]
+        local = local_frame(spark, rows, CHANGELOG_SCHEMA)
+        dist = spark.createDataFrame(rows, CHANGELOG_SCHEMA)
+        assert local.isLocal() and not dist.isLocal()
+        got = {}
+        for name, df in (("local", local), ("dist", dist)):
+            st = ChangelogStore(spark, str(tmp_path / name), height_band=10)
+            assert st.write_batch(df).height == 34
+            got[name] = (
+                sorted(tuple(r) for r in st.changelog().collect()),
+                _band_files(st.root),
+            )
+        assert got["local"] == got["dist"]
+        assert len(got["local"][0]) == 34
+        assert set(got["local"][1].values()) == {1}  # one file per band
+        assert len(got["local"][1]) == 4
+
+    def test_local_batch_over_target_splits_into_files(self, spark, tmp_path):
+        from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
+        from fluxdb_spark.store import TARGET_FILE_ROWS
+
+        n = TARGET_FILE_ROWS + 1
+        df = local_frame(
+            spark,
+            [
+                ("tst", f"t{i % 5}", 1 + i // 100_000, str(i), None, True,
+                 "b", 1)
+                for i in range(n)
+            ],
+            CHANGELOG_SCHEMA,
+        )
+        st = ChangelogStore(spark, str(tmp_path / "db"))
+        assert st.write_batch(df).height == 1 + (n - 1) // 100_000
+        assert _band_files(st.root) == {
+            "changelog/collection=tst/height_band=0": 2
+        }
+        assert st.changelog().count() == n
 
 
 class TestStagingSweep:

@@ -12,12 +12,16 @@ Usage: python tools/compaction_bench.py [n_batches]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# import fluxdb_spark from the checkout this script lives in
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from fluxdb_spark import get_spark  # noqa: E402
 from fluxdb_spark.operators import state_at  # noqa: E402

@@ -21,12 +21,16 @@ Prints one JSON line.  Usage: python tools/ingest_bench.py [rows] [flushes]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# import fluxdb_spark from the checkout this script lives in
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 
