@@ -44,7 +44,14 @@ files are height-sorted so row-group min/max stats prune further):
       changelog/collection=<name>/height_band=<h // band>/part-*.parquet
       _checkpoint/<shard>.json
       _manifests/batch-<id>.json     (present only for in-flight batches)
+      _manifests/compact-<id>.json   (swap journal of an in-flight band
+                                      rewrite: compact or DML)
       _staging/batch-<id>/...        (Spark output before the move)
+      _staging/compact-<id>[-old]/   (a compacted band before its swap,
+      _staging/rewrite-<id>[-old]/    a DML-rewritten one; `-old` holds
+                                      the replaced band until removal)
+      _staging/rebase-<id>/          (expire_bands' live tail before the
+                                      move into the horizon band)
       _writer-<stream>.lock          (single-writer lease per stream)
       _retention.json                (horizon written by expire_bands)
       _commits/v<version>.json       (optimistic commit log: history,
@@ -62,6 +69,7 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import partial
 
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
@@ -233,10 +241,7 @@ class WriterLease:
                 f.write(self._payload())
             os.replace(tmp, self.path)
         except OSError:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
+            _discard_file(tmp)
             return False
         return True
 
@@ -251,10 +256,7 @@ class WriterLease:
         except ValueError:
             mine = False
         if mine:
-            try:
-                os.remove(self.path)
-            except FileNotFoundError:
-                pass
+            _discard_file(self.path)
 
 
 # Same env-var name the reference uses to gate its per-write size logging
@@ -440,10 +442,7 @@ class CommitLog:
                 except FileExistsError:
                     version += 1  # lost the race: retry at the next slot
         finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
+            _discard_file(tmp)
 
     def sweep_claims(self, min_age_s: float) -> None:
         """Drop orphaned `.claim-*` temps from crashed claimers. Age-gated
@@ -527,10 +526,7 @@ class CommitLog:
                 and fname.endswith(".json")
                 and fname != self._ckpt_name(version)
             ):
-                try:
-                    os.remove(os.path.join(self.dir, fname))
-                except FileNotFoundError:
-                    pass
+                _discard_file(os.path.join(self.dir, fname))
         return version
 
     def prune_entries(self, keep_last: int = 1000) -> int:
@@ -613,6 +609,94 @@ def read_changelog_files(
         .load([os.path.join(root, rel) for rel in relpaths])
         .drop("height_band")
     )
+
+
+def _discard_file(path: str) -> None:
+    """Remove `path` if it is still there: two processes opening a store
+    race recovery, so every cleanup tolerates the other side winning."""
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def _read_journal(path: str) -> dict | None:
+    """A swap journal's payload; None when it is absent or unreadable."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
+
+
+def _journaled_swap(
+    target: str,
+    new: str,
+    old: str,
+    journal: str,
+    write,
+    is_data_file,
+    describe=lambda names: {},
+    after_swap=lambda entry: None,
+) -> list[str]:
+    """The one atomic directory replacement behind compaction, DML and
+    index pruning. `write(new)` fully writes the replacement to a side
+    directory (never inside a partitioned data dir, whose discovery
+    would trip over the suffix) and non-data sidecars (_SUCCESS, .crc)
+    are dropped; then the journal pins `new`, `old` and whatever
+    `describe(data file names)` adds, and is written atomically BEFORE
+    the two renames, so `_settle_swap` can complete or roll back a crash
+    at any point. `target` is absent only between the renames. The
+    `after_swap(journal entry)` step runs before the journal is removed,
+    so recovery re-runs it after a crash. Returns the data file names
+    `target` now holds."""
+    write(new)
+    for junk in os.listdir(new):
+        if not is_data_file(junk):
+            os.remove(os.path.join(new, junk))
+    names = os.listdir(new)
+    entry = {"new": new, "old": old, **describe(names)}
+    jtmp = journal + ".tmp"
+    with open(jtmp, "w") as f:
+        json.dump(entry, f)
+    os.replace(jtmp, journal)
+    os.rename(target, old)
+    os.rename(new, target)
+    after_swap(entry)
+    _discard_file(journal)
+    shutil.rmtree(old, ignore_errors=True)
+    return names
+
+
+def _settle_swap(
+    target: str, new: str, old: str, after_swap=lambda: None
+) -> bool:
+    """Complete or roll back a `_journaled_swap` that crashed, from the
+    (target, new, old) its journal pins. Each rename is atomic, so the
+    state is unambiguous:
+
+    - target present, old absent -> crash before the swap started:
+      discard the staged `new`.
+    - target absent -> crash between the renames: complete with `new`
+      if it exists, else roll `old` back.
+    - target present, old present -> crash after the second rename:
+      the target IS the replacement; discard `old`.
+
+    A completed swap then runs the caller's `after_swap` step (before
+    the side directories go, so a crash inside recovery finds the swap
+    completed again). Returns whether the swap completed."""
+    if os.path.exists(target):
+        completed = os.path.exists(old)
+    else:
+        completed = os.path.exists(new)
+        back = new if completed else old
+        if os.path.exists(back):
+            os.rename(back, target)
+    if completed:
+        after_swap()
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(new, ignore_errors=True)
+    return completed
 
 
 @dataclass(frozen=True)
@@ -753,6 +837,38 @@ class FileChangelogBackend(StoreBackend):
     def _is_data_file(self, fname: str) -> bool:
         return fname.endswith(self.data_suffix)
 
+    def _data_files(self, top: str | None = None) -> list[str]:
+        """Paths of the data files under `top` (default: the data dir)."""
+        return [
+            os.path.join(dirpath, fn)
+            for dirpath, _d, fnames in os.walk(top or self.data_dir)
+            for fn in fnames
+            if self._is_data_file(fn)
+        ]
+
+    def _has_pending_batch(self) -> bool:
+        """Does a batch manifest (an in-flight or torn write) exist?"""
+        return any(
+            f.startswith("batch-") and f.endswith(".json")
+            for f in os.listdir(self.manifest_dir)
+        )
+
+    def _write_clustered(self, df, n_out: int, path: str) -> None:
+        """The rewrite write of expire's rebase, linear compaction and
+        DML: `n_out` files hash-clustered by tablet_id (one task when
+        n_out is 1), each (tablet_id, height)-sorted, restoring the
+        row-group pruning layout of a single large batch."""
+        self._write(
+            (
+                df.repartition(n_out, "tablet_id")
+                if n_out > 1
+                else df.coalesce(1)
+            )
+            .sortWithinPartitions("tablet_id", "height")
+            .write.mode("overwrite"),
+            path,
+        )
+
     def stage(self, clustered, batch_id):
         stage = os.path.join(self.staging_dir, f"batch-{batch_id}")
         writer = (
@@ -770,20 +886,17 @@ class FileChangelogBackend(StoreBackend):
         self._write(writer, stage)
         # every target path, for the manifest commit() writes before any
         # file reaches the band directories
-        moves = []
-        for dirpath, _dirnames, filenames in os.walk(stage):
-            rel = os.path.relpath(dirpath, stage)
-            for fname in filenames:
-                if not self._is_data_file(fname):
-                    continue  # _SUCCESS markers, .crc sidecars
-                moves.append(
-                    (
-                        os.path.join(dirpath, fname),
-                        os.path.join(
-                            self.data_dir, rel, f"b{batch_id[:8]}-{fname}"
-                        ),
-                    )
-                )
+        moves = [
+            (
+                src,
+                os.path.join(
+                    self.data_dir,
+                    os.path.relpath(os.path.dirname(src), stage),
+                    f"b{batch_id[:8]}-{os.path.basename(src)}",
+                ),
+            )
+            for src in self._data_files(stage)
+        ]
         staged = StagedBatch(batch_id, stage, moves)
         if not moves:
             self.discard(staged)
@@ -831,12 +944,9 @@ class FileChangelogBackend(StoreBackend):
                 "remove": [],
             }
         )
-        try:
-            # a concurrent open's recover() may clean the now-committed
-            # manifest before we do
-            os.remove(manifest)
-        except FileNotFoundError:
-            pass
+        # a concurrent open's recover() may clean the now-committed
+        # manifest before we do
+        _discard_file(manifest)
         self.discard(staged)
 
     def _uncommitted_targets(self, checkpoint_of) -> set[str]:
@@ -866,12 +976,7 @@ class FileChangelogBackend(StoreBackend):
         pending = self._uncommitted_targets(checkpoint_of)
         try:
             if pending:
-                files = []
-                for dirpath, _d, fnames in os.walk(self.data_dir):
-                    for fn in fnames:
-                        p = os.path.join(dirpath, fn)
-                        if self._is_data_file(fn) and p not in pending:
-                            files.append(p)
+                files = [p for p in self._data_files() if p not in pending]
                 if not files:
                     return None
                 return self._read(
@@ -980,13 +1085,8 @@ class FileChangelogBackend(StoreBackend):
                 with open(path) as f:
                     m = json.load(f)
             except (OSError, json.JSONDecodeError):
-                # torn manifest write: nothing was moved. Two processes
-                # opening the store race recover() concurrently, so every
-                # removal here tolerates the other side winning first.
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
+                # torn manifest write: nothing was moved
+                _discard_file(path)
                 continue
             ckpt = checkpoint_of(m.get("shard"))
             committed = ckpt is not None and m["hi"] <= ckpt.height
@@ -1001,10 +1101,7 @@ class FileChangelogBackend(StoreBackend):
                 continue
             if not committed:
                 for target in m["targets"]:
-                    try:
-                        os.remove(target)
-                    except FileNotFoundError:
-                        pass
+                    _discard_file(target)
                 rolled += 1
             else:
                 # crash between checkpoint advance and commit-log claim:
@@ -1024,10 +1121,7 @@ class FileChangelogBackend(StoreBackend):
                         }
                     )
             shutil.rmtree(m.get("staging", ""), ignore_errors=True)
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass
+            _discard_file(path)
         self._sweep_orphaned_staging(lease_is_fresh)
         self.commit_log.sweep_claims(self.sweep_min_age_s)
         self._heal_genesis()
@@ -1045,17 +1139,9 @@ class FileChangelogBackend(StoreBackend):
         at versions 1 and 2) — harmless, resolution unions add-sets."""
         if self.commit_log.latest_version() > 0:
             return
-        if any(
-            f.startswith("batch-") and f.endswith(".json")
-            for f in os.listdir(self.manifest_dir)
-        ):
+        if self._has_pending_batch():
             return  # in-flight batch: its files are NOT committed yet
-        files = [
-            self._rel(os.path.join(dirpath, fn))
-            for dirpath, _d, fnames in os.walk(self.data_dir)
-            for fn in fnames
-            if self._is_data_file(fn)
-        ]
+        files = [self._rel(p) for p in self._data_files()]
         if files:
             self.commit_log.claim(
                 {
@@ -1121,66 +1207,72 @@ class FileChangelogBackend(StoreBackend):
             ):
                 shutil.rmtree(path, ignore_errors=True)
 
-    def _recover_compact_swap(self, journal: str, lease_is_fresh) -> None:
-        """Complete or roll back a compaction band swap that crashed
-        between its two renames (see ChangelogStore._compact_locked). The
-        journal pins (band, new, old); the state machine is unambiguous
-        because each rename is atomic:
+    def _claim_rewrite(self, m: dict, **extra) -> None:
+        """Log a band swap, pinned by its journal entry `m`, as one
+        `rewrite` commit."""
+        self.commit_log.claim(
+            {
+                "action": "rewrite",
+                "kind": m.get("kind", "compact"),
+                "swap_id": m["swap_id"],
+                "add": m.get("add", []),
+                "remove": m.get("remove", []),
+                **extra,
+            }
+        )
 
-        - band present, old absent  -> crash before the swap started (or
-          after it fully finished): discard the staged `new`.
-        - band absent,  old present -> crash mid-swap: complete with the
-          staged `new` if it exists, else roll the original back.
-        - band present, old present -> crash after the second rename:
-          the band IS the compacted data; discard `old`.
+    def _swap_band(self, band: str, kind: str, write) -> int:
+        """Replace the band directory `band` with the files `write(path)`
+        writes, through `_journaled_swap`: staged as
+        `_staging/compact-<id>` (`rewrite-<id>` for DML), journaled as
+        `_manifests/compact-<id>.json` with the exact file delta, and
+        logged as one `rewrite` commit of `kind` as its post-swap step,
+        which `_recover_compact_swap` heals after a crash. Returns the
+        number of data files the band now holds."""
+        swap_id = uuid.uuid4().hex
+        stage = "compact" if kind == "compact" else "rewrite"
+        new = os.path.join(self.staging_dir, f"{stage}-{swap_id}")
+        remove = [self._rel(p) for p in self._data_files(band)]
+        names = _journaled_swap(
+            band,
+            new,
+            new + "-old",
+            os.path.join(self.manifest_dir, f"compact-{swap_id}.json"),
+            write,
+            self._is_data_file,
+            describe=lambda names: {
+                "band": band,
+                "swap_id": swap_id,
+                "kind": kind,
+                "remove": remove,
+                "add": [self._rel(os.path.join(band, fn)) for fn in names],
+            },
+            after_swap=self._claim_rewrite,
+        )
+        return len(names)
+
+    def _recover_compact_swap(self, journal: str, lease_is_fresh) -> None:
+        """Settle a compaction or DML band swap (`_swap_band`) that
+        crashed, with `_settle_swap` over the journal's (band, new, old).
+        A completed swap that crashed before its commit-log claim gets
+        the rewrite entry healed from the journal, so time travel's file
+        resolution stays exact.
 
         Skipped while a live maintenance lease is fresh (the compactor is
         mid-swap right now, not crashed)."""
         if lease_is_fresh("maintenance"):
             return
-        try:
-            with open(journal) as f:
-                m = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            try:
-                os.remove(journal)
-            except FileNotFoundError:
-                pass
-            return
-        band, new, old = m["band"], m["new"], m["old"]
-        completed = False
-        if not os.path.exists(band):
-            if os.path.exists(new):
-                os.rename(new, band)
-                completed = True
-            elif os.path.exists(old):
-                os.rename(old, band)
-        elif os.path.exists(old):
-            completed = True  # crash after the second rename
-        if (
-            completed
-            and "swap_id" in m
-            and not self.commit_log.contains("swap_id", m["swap_id"])
-        ):
-            # the swap reached the data dir but crashed before its
-            # commit-log claim: heal the rewrite entry from the journal
-            # so time travel's file resolution stays exact
-            self.commit_log.claim(
-                {
-                    "action": "rewrite",
-                    "kind": m.get("kind", "compact"),
-                    "swap_id": m["swap_id"],
-                    "add": m.get("add", []),
-                    "remove": m.get("remove", []),
-                    "healed": True,
-                }
-            )
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(new, ignore_errors=True)
-        try:
-            os.remove(journal)
-        except FileNotFoundError:
-            pass
+        m = _read_journal(journal)
+
+        def heal() -> None:
+            if "swap_id" in m and not self.commit_log.contains(
+                "swap_id", m["swap_id"]
+            ):
+                self._claim_rewrite(m, healed=True)
+
+        if m is not None:
+            _settle_swap(m["band"], m["new"], m["old"], heal)
+        _discard_file(journal)
 
 
 class ParquetChangelogBackend(FileChangelogBackend):
@@ -1620,6 +1712,15 @@ class ChangelogStore:
 
     # --- maintenance -------------------------------------------------------
 
+    def _refuse_pending_batch(self, doing: str) -> None:
+        """Maintenance never runs over an in-flight batch (a pending
+        manifest): rewriting or dropping a band would orphan that
+        manifest's rollback targets."""
+        if self._backend._has_pending_batch():
+            raise WriteConsistencyError(
+                f"pending write manifest: run recover() before {doing}"
+            )
+
     def retention_horizon(self) -> int:
         """First height with full history (0 until expire_bands runs)."""
         path = os.path.join(self.root, "_retention.json")
@@ -1657,13 +1758,7 @@ class ChangelogStore:
             return self._expire_bands_locked(before_height)
 
     def _expire_bands_locked(self, before_height: int) -> dict:
-        if any(
-            f.startswith("batch-") and f.endswith(".json")
-            for f in os.listdir(self._manifest_dir)
-        ):
-            raise WriteConsistencyError(
-                "pending write manifest: run recover() before expiring"
-            )
+        self._refuse_pending_batch("expiring")
         horizon_band = before_height // self.height_band
         horizon = horizon_band * self.height_band
         hmax = horizon - 1
@@ -1720,22 +1815,14 @@ class ChangelogStore:
             tmp = os.path.join(
                 self._staging_dir, f"rebase-{uuid.uuid4().hex}"
             )
-            self._backend._write(
-                (
-                    tail.repartition(n_out, "tablet_id")
-                    if n_out > 1
-                    else tail.coalesce(1)
+            self._backend._write_clustered(tail, n_out, tmp)
+            for src in self._backend._data_files(tmp):
+                os.rename(
+                    src,
+                    os.path.join(
+                        target, f"rebase-h{hmax}-{os.path.basename(src)}"
+                    ),
                 )
-                .sortWithinPartitions("tablet_id", "height")
-                .write.mode("overwrite"),
-                tmp,
-            )
-            for f in os.listdir(tmp):
-                if self._backend._is_data_file(f):
-                    os.rename(
-                        os.path.join(tmp, f),
-                        os.path.join(target, f"rebase-h{hmax}-{f}"),
-                    )
             shutil.rmtree(tmp, ignore_errors=True)
         # count the rebased tail (cheap: it is the live-key set)
         add_rel: list[str] = []
@@ -1756,12 +1843,9 @@ class ChangelogStore:
                 rows_rebased += self._backend._read(*rebase_files).count()
         for _coll, paths in per_coll.items():
             for p in paths:
-                for dirpath, _d, fnames in os.walk(p):
-                    remove_rel.extend(
-                        self._backend._rel(os.path.join(dirpath, fn))
-                        for fn in fnames
-                        if self._backend._is_data_file(fn)
-                    )
+                remove_rel.extend(
+                    self._backend._rel(f) for f in self._backend._data_files(p)
+                )
                 shutil.rmtree(p, ignore_errors=True)
         tmp = os.path.join(self.root, "_retention.json.tmp")
         with open(tmp, "w") as f:
@@ -1815,12 +1899,7 @@ class ChangelogStore:
         debris; a file that reappears was committed mid-walk, not
         missing)."""
         self.recover()
-        actual = {
-            os.path.join(dirpath, fn)
-            for dirpath, _d, fnames in os.walk(self._data_dir)
-            for fn in fnames
-            if self._backend._is_data_file(fn)
-        }
+        actual = set(self._backend._data_files())
         latest = self._backend.commit_log.latest_version()
         expected = (
             set(self._backend.files_at_version(latest))
@@ -1883,18 +1962,18 @@ class ChangelogStore:
         here many streaming `write_batch` flushes land many tiny files,
         and at 100 TB the scan-time file listing becomes the bottleneck).
 
-        Per-band write-then-swap: the replacement directory is fully
-        written under _staging/ (never inside the partitioned data dir,
-        so concurrent partition discovery can't trip over a non-band
-        suffix), a swap journal is recorded in _manifests/, and two
-        atomic renames exchange the band. A reader sees either the old
-        band or the new one — the only exposure is the microsecond gap
-        between the renames, and a crash anywhere is healed by
-        recover() (complete if the new band was staged, else roll back;
-        see _recover_compact_swap). Rows are re-clustered by tablet_id
-        and height-sorted, restoring the row-group pruning layout of a
-        single large batch. The checkpoint protocol is untouched —
-        compaction moves no height boundaries.
+        Per-band write-then-swap through the store's one journaled swap
+        (`FileChangelogBackend._swap_band` over `_journaled_swap`): the
+        replacement directory is fully written under _staging/, a swap
+        journal is recorded in _manifests/, and two atomic renames
+        exchange the band. A reader sees either the old band or the new
+        one — the only exposure is the microsecond gap between the
+        renames, and a crash anywhere is healed by recover() (complete
+        if the new band was staged, else roll back; see _settle_swap).
+        Rows are re-clustered by tablet_id and height-sorted, restoring
+        the row-group pruning layout of a single large batch. The
+        checkpoint protocol is untouched — compaction moves no height
+        boundaries.
 
         Refuses to run over an in-flight batch (pending manifest) since
         rewriting a band would orphan that manifest's rollback targets.
@@ -1917,13 +1996,7 @@ class ChangelogStore:
     def _compact_locked(
         self, target_rows_per_file: int, min_files: int, zorder: bool = False
     ) -> dict:
-        if any(
-            f.startswith("batch-") and f.endswith(".json")
-            for f in os.listdir(self._manifest_dir)
-        ):
-            raise WriteConsistencyError(
-                "pending write manifest: run recover() before compacting"
-            )
+        self._refuse_pending_batch("compacting")
         stats = {"bands": 0, "files_before": 0, "files_after": 0}
         for coll_entry in sorted(os.scandir(self._data_dir), key=lambda e: e.path):
             if not coll_entry.is_dir():
@@ -1933,12 +2006,8 @@ class ChangelogStore:
             ):
                 if not band_entry.is_dir():
                     continue
-                files = [
-                    f
-                    for f in os.listdir(band_entry.path)
-                    if self._backend._is_data_file(f)
-                ]
-                if len(files) < min_files:
+                n_files = len(self._backend._data_files(band_entry.path))
+                if n_files < min_files:
                     continue
                 # reading the band dir directly (no basePath) yields the
                 # file columns only — exactly what partitionBy wrote
@@ -1946,97 +2015,27 @@ class ChangelogStore:
                 n_rows = band_df.count()
                 n_out = max(1, -(-n_rows // target_rows_per_file))
                 if zorder:
-                    band_df = band_df.withColumn(
+                    z = band_df.withColumn(
                         "_z", _zorder_key("primary_key", "height")
                     )
-                    sort_cols = ["tablet_id", "_z"]
                     rewritten = (
-                        band_df.repartitionByRange(
-                            n_out, "tablet_id", "_z"
-                        )
+                        z.repartitionByRange(n_out, "tablet_id", "_z")
                         if n_out > 1
-                        else band_df.coalesce(1)
+                        else z.coalesce(1)
+                    ).sortWithinPartitions("tablet_id", "_z").drop("_z")
+                    write = partial(
+                        self._backend._write, rewritten.write.mode("overwrite")
                     )
                 else:
-                    sort_cols = ["tablet_id", "height"]
-                    rewritten = (
-                        band_df.repartition(n_out, "tablet_id")
-                        if n_out > 1
-                        else band_df.coalesce(1)
+                    write = partial(
+                        self._backend._write_clustered, band_df, n_out
                     )
-                # Every intermediate directory lives under _staging/ — a
-                # concurrent reader's partition discovery over the data
-                # dir must never see a non-castable `height_band=N.xyz`
-                # suffix (which would fail the whole scan, not just this
-                # band).
-                swap_id = uuid.uuid4().hex
-                new = os.path.join(self._staging_dir, f"compact-{swap_id}")
-                old = os.path.join(
-                    self._staging_dir, f"compact-{swap_id}-old"
+                files_after = self._backend._swap_band(
+                    band_entry.path, "compact", write
                 )
-                self._backend._write(
-                    rewritten.sortWithinPartitions(*sort_cols)
-                    .drop("_z")
-                    .write.mode("overwrite"),
-                    new,
-                )
-                for junk in os.listdir(new):  # _SUCCESS / .crc sidecars
-                    if not self._backend._is_data_file(junk):
-                        os.remove(os.path.join(new, junk))
-                # journal BEFORE the swap so recover() can complete or
-                # roll back a crash at any point between the two renames
-                # (the old scheme stranded the band as `.old-*` forever)
-                journal = os.path.join(
-                    self._manifest_dir, f"compact-{swap_id}.json"
-                )
-                jtmp = journal + ".tmp"
-                # add/remove pinned in the journal BEFORE the swap, so a
-                # crash at any later point can heal the commit-log entry
-                # with the exact file delta (see _recover_compact_swap)
-                rel = self._backend._rel
-                jentry = {
-                    "band": band_entry.path,
-                    "new": new,
-                    "old": old,
-                    "swap_id": swap_id,
-                    "kind": "compact",
-                    "remove": [
-                        rel(os.path.join(band_entry.path, fn))
-                        for fn in files
-                    ],
-                    "add": [
-                        rel(os.path.join(band_entry.path, fn))
-                        for fn in os.listdir(new)
-                        if self._backend._is_data_file(fn)
-                    ],
-                }
-                with open(jtmp, "w") as f:
-                    json.dump(jentry, f)
-                os.replace(jtmp, journal)
-                # the swap: the band path is absent only between these
-                # two renames (microseconds, heals via recover())
-                os.rename(band_entry.path, old)
-                os.rename(new, band_entry.path)
-                self._backend.commit_log.claim(
-                    {
-                        "action": "rewrite",
-                        "kind": "compact",
-                        "swap_id": swap_id,
-                        "add": jentry["add"],
-                        "remove": jentry["remove"],
-                    }
-                )
-                os.remove(journal)
-                shutil.rmtree(old, ignore_errors=True)
                 stats["bands"] += 1
-                stats["files_before"] += len(files)
-                stats["files_after"] += len(
-                    [
-                        f
-                        for f in os.listdir(band_entry.path)
-                        if self._backend._is_data_file(f)
-                    ]
-                )
+                stats["files_before"] += n_files
+                stats["files_after"] += files_after
         # maintenance also snapshots the commit log (Delta-checkpoint
         # analog) so time-travel resolution stays O(entries since the
         # snapshot) on a long-lived store
@@ -2104,12 +2103,13 @@ class ChangelogStore:
         value, is_deletion, block_id, block_num). Copy-on-write at band
         granularity: only bands that actually contain matching rows are
         rewritten (everything else is untouched, file-identical), each
-        through the same journaled write-then-swap protocol as compact —
-        crash anywhere is healed by recover(), and each swap lands as a
-        `rewrite` commit in the history log. Checkpoints are untouched
-        (no height boundaries move). Snapshot indexes that referenced
-        purged keys stay consistent for reads (the join-back finds no
-        row) but callers deleting heavily should reindex afterwards."""
+        through the same journaled swap as compact (`_swap_band` over
+        `_journaled_swap`) — a crash anywhere is healed by recover(),
+        and each swap lands as a `rewrite` commit in the history log.
+        Checkpoints are untouched (no height boundaries move). Snapshot
+        indexes that referenced purged keys stay consistent for reads
+        (the join-back finds no row) but callers deleting heavily should
+        reindex afterwards."""
         with self._writer_lease("maintenance", drain_others=True):
             return self._rewrite_where_locked(condition, "purge", None)
 
@@ -2137,13 +2137,7 @@ class ChangelogStore:
         return self.delete_where(cond)
 
     def _rewrite_where_locked(self, condition, kind: str, value_expr) -> dict:
-        if any(
-            f.startswith("batch-") and f.endswith(".json")
-            for f in os.listdir(self._manifest_dir)
-        ):
-            raise WriteConsistencyError(
-                "pending write manifest: run recover() before rewriting"
-            )
+        self._refuse_pending_batch("rewriting")
         cond = F.expr(condition) if isinstance(condition, str) else condition
         df = self._backend.committed_relation(_READ_SCHEMA, self.checkpoint)
         stats = {"kind": kind, "bands_rewritten": 0, "rows_matched": 0}
@@ -2158,18 +2152,12 @@ class ChangelogStore:
             .agg(F.count(F.lit(1)).alias("matched"))
             .collect()
         )
-        rel = self._backend._rel
         for row in sorted(affected, key=lambda r: (r.collection, r.height_band)):
             band_path = os.path.join(
                 self._data_dir,
                 f"collection={row.collection}",
                 f"height_band={int(row.height_band)}",
             )
-            files = [
-                f
-                for f in os.listdir(band_path)
-                if self._backend._is_data_file(f)
-            ]
             band_df = self._backend._read(band_path).withColumns(
                 {
                     "collection": F.lit(row.collection),
@@ -2188,57 +2176,12 @@ class ChangelogStore:
                     ).otherwise(F.col("value")),
                 )
             out = out.drop("collection", "height_band")
-            n_kept = out.count()
-            n_out = _n_files(n_kept)
-            swap_id = uuid.uuid4().hex
-            new = os.path.join(self._staging_dir, f"rewrite-{swap_id}")
-            old = os.path.join(self._staging_dir, f"rewrite-{swap_id}-old")
-            self._backend._write(
-                (
-                    out.repartition(n_out, "tablet_id")
-                    if n_out > 1
-                    else out.coalesce(1)
-                )
-                .sortWithinPartitions("tablet_id", "height")
-                .write.mode("overwrite"),
-                new,
+            n_out = _n_files(out.count())
+            self._backend._swap_band(
+                band_path,
+                kind,
+                partial(self._backend._write_clustered, out, n_out),
             )
-            for junk in os.listdir(new):
-                if not self._backend._is_data_file(junk):
-                    os.remove(os.path.join(new, junk))
-            jentry = {
-                "band": band_path,
-                "new": new,
-                "old": old,
-                "swap_id": swap_id,
-                "kind": kind,
-                "remove": [rel(os.path.join(band_path, fn)) for fn in files],
-                "add": [
-                    rel(os.path.join(band_path, fn))
-                    for fn in os.listdir(new)
-                    if self._backend._is_data_file(fn)
-                ],
-            }
-            journal = os.path.join(
-                self._manifest_dir, f"compact-{swap_id}.json"
-            )
-            jtmp = journal + ".tmp"
-            with open(jtmp, "w") as f:
-                json.dump(jentry, f)
-            os.replace(jtmp, journal)
-            os.rename(band_path, old)
-            os.rename(new, band_path)
-            self._backend.commit_log.claim(
-                {
-                    "action": "rewrite",
-                    "kind": kind,
-                    "swap_id": swap_id,
-                    "add": jentry["add"],
-                    "remove": jentry["remove"],
-                }
-            )
-            os.remove(journal)
-            shutil.rmtree(old, ignore_errors=True)
             stats["bands_rewritten"] += 1
             stats["rows_matched"] += int(row.matched)
         return stats
@@ -2377,33 +2320,29 @@ class IndexStore:
         os.makedirs(self._dir, exist_ok=True)
 
     def _recover_swap(self) -> None:
-        """Heal a prune() that crashed between its two renames (same
-        journal pattern as the changelog compaction swap): complete with
-        the staged rewrite if it exists, else roll the old index back,
-        then discard whatever side directories remain. Without this, a
-        mid-swap crash silently dropped every index snapshot (reads fell
-        back to the full fold — correct but unindexed — and the stranded
-        directories leaked disk)."""
-        if not os.path.exists(self._journal):
-            return
-        try:
-            with open(self._journal) as f:
-                m = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            m = {}
-        new, old = m.get("new", ""), m.get("old", "")
-        if not os.path.exists(self._dir):
-            if new and os.path.exists(new):
-                os.rename(new, self._dir)
-            elif old and os.path.exists(old):
-                os.rename(old, self._dir)
-        for side in (new, old):
-            if side:
-                shutil.rmtree(side, ignore_errors=True)
-        try:
-            os.remove(self._journal)
-        except FileNotFoundError:
-            pass
+        """Heal a prune() that crashed mid-swap with `_settle_swap`
+        (complete with the staged rewrite if it exists, else roll the old
+        index back), then drop the journal and every side directory left:
+        a swap that crashed before its journal landed leaves an
+        unreferenced `tablet_index.rewrite-*` and journal temp. One
+        maintainer owns an index root (its single journal assumes it), so
+        no live swap can own them. Without this, a mid-swap crash
+        silently dropped every index snapshot (reads fell back to the
+        full fold — correct but unindexed — and the stranded directories
+        leaked disk)."""
+        m = _read_journal(self._journal)
+        if m is not None:
+            _settle_swap(self._dir, m.get("new", ""), m.get("old", ""))
+        _discard_file(self._journal)
+        _discard_file(self._journal + ".tmp")
+        if not os.path.isdir(self._dir):
+            return  # no index to fall back to: keep any side directory
+        base = os.path.basename(self._dir)
+        for name in os.listdir(self.root):
+            if name.startswith((base + ".rewrite-", base + ".old-")):
+                shutil.rmtree(
+                    os.path.join(self.root, name), ignore_errors=True
+                )
 
     # flag threshold for an index snapshot that has grown heavy enough to
     # hurt write amplification (reference indexing.go:477-480's 25 MB
@@ -2453,10 +2392,14 @@ class IndexStore:
         from fluxdb_spark.schema import TABLET_INDEX_SCHEMA
 
         try:
-            df = self.spark.read.schema(TABLET_INDEX_SCHEMA).parquet(self._dir)
-            df.isEmpty()  # force file listing so an empty dir falls back
-            return df
-        except Exception:
+            # an empty directory reads as empty under the fixed schema
+            return self.spark.read.schema(TABLET_INDEX_SCHEMA).parquet(
+                self._dir
+            )
+        except AnalysisException:
+            # no index directory: everything else — a corrupt file —
+            # must surface, or prune/reindex would act on an empty index
+            # and indexed reads would silently fall back
             return local_frame(self.spark, [], TABLET_INDEX_SCHEMA)
 
     def prune(self, prune_frequency: int) -> int:
@@ -2464,12 +2407,13 @@ class IndexStore:
         `prune_indexes`' retained set. Returns the number of snapshot
         (collection, tablet_id, snapshot_height) groups deleted.
 
-        Write-then-swap: retained rows are fully written to a side
-        directory before the old one is replaced, so a crash leaves either
-        the old or the new index complete — reads never see a half-pruned
-        relation. The swap is journaled (_index_swap.json) before the
-        renames, and the next open completes or rolls it back (see
-        _recover_swap).
+        Write-then-swap through the store's one journaled swap
+        (`_journaled_swap`, with no post-swap step): retained rows are
+        fully written to a side directory before the old one is replaced,
+        so a crash leaves either the old or the new index complete —
+        reads never see a half-pruned relation. The swap is journaled
+        (_index_swap.json) before the renames, and the next open
+        completes or rolls it back (see _recover_swap).
         """
         from fluxdb_spark.operators.snapshot import prune_indexes
 
@@ -2485,23 +2429,18 @@ class IndexStore:
 
     def _rewrite_swap(self, replacement: DataFrame) -> None:
         """Journaled copy-on-write replacement of the whole index
-        relation: fully write the new rows to a side directory, then two
-        atomic renames; a crash anywhere is healed by _recover_swap."""
+        relation: `_journaled_swap` through `tablet_index.rewrite-<id>`
+        and `.old-<id>` siblings; a crash anywhere is healed by
+        _recover_swap."""
         swap_id = uuid.uuid4().hex
-        tmp = self._dir + f".rewrite-{swap_id}"
-        replacement.write.mode("overwrite").parquet(tmp)
-        old = self._dir + f".old-{swap_id}"
-        jtmp = self._journal + ".tmp"
-        with open(jtmp, "w") as f:
-            json.dump({"new": tmp, "old": old}, f)
-        os.replace(jtmp, self._journal)
-        os.rename(self._dir, old)
-        os.rename(tmp, self._dir)
-        try:
-            os.remove(self._journal)
-        except FileNotFoundError:
-            pass
-        shutil.rmtree(old, ignore_errors=True)
+        _journaled_swap(
+            self._dir,
+            self._dir + f".rewrite-{swap_id}",
+            self._dir + f".old-{swap_id}",
+            self._journal,
+            replacement.write.mode("overwrite").parquet,
+            lambda fname: fname.endswith(".parquet"),
+        )
 
     def reindex(
         self,

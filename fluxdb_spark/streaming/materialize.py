@@ -12,10 +12,14 @@ applied-version floor travels INSIDE the aggregate table directory
 (`_mat_state.json`, swapped atomically with the data), so losing or
 resetting the stream checkpoint merely redelivers entries the floor
 already excludes — redelivery changes nothing, which the tests prove by
-deleting the checkpoint outright. The table swap itself is journal-free
-but recoverable: write tmp -> rename current away -> rename tmp in ->
-drop old, with `_recover` completing or rolling back a crash at any
-point (same staging discipline as the store's band swaps).
+deleting the checkpoint outright. The table swap (`_swap_table`, shared
+with the retrieval tables' rebuild and compaction) is journal-free but
+recoverable: write `<dest>.tmp-*` -> rename current away to
+`<dest>.old-*` -> rename tmp in -> drop old, with `_recover` completing
+or rolling back a crash at any point from the sibling names alone. The
+store's band swaps and index prune are the journaled protocol instead
+(`store._journaled_swap`): their replacement is staged away from the
+target's siblings and a journal names it before the renames.
 
 Only algebraic aggregates can merge partial results (sum of sums, min
 of mins, max of maxes; counts merge as sums) — the same restriction any
@@ -116,6 +120,27 @@ def _recover(dest: str, grace_s: float = 0.5) -> None:
             shutil.rmtree(os.path.join(parent, p), ignore_errors=True)
 
 
+def _swap_table(
+    dest: str, df: DataFrame, state: dict, part: str | None = None
+) -> None:
+    """Replace the table at `dest` with `df` (written under the
+    subdirectory `part` when given) plus its state file `state`: write
+    `<dest>.tmp-*` -> state file -> rename dest away to `<dest>.old-*` ->
+    rename tmp in -> drop old. Readers see the old table or the new one,
+    never a mixture; `_recover` heals a crash at any point."""
+    tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
+    df.write.mode("overwrite").parquet(
+        tmp if part is None else os.path.join(tmp, part)
+    )
+    with open(_state_path(tmp), "w") as f:
+        json.dump(state, f)
+    old = f"{dest}.old-{uuid.uuid4().hex}"
+    if os.path.isdir(dest):
+        os.rename(dest, old)
+    os.rename(tmp, dest)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def applied_version(dest: str) -> int:
     _recover(dest)
     try:
@@ -177,17 +202,6 @@ def materialize_aggregate(
             *[F.expr(expr).alias(name) for name, expr, _m in aggs]
         )
 
-    def _swap_in(part: DataFrame, version: int) -> None:
-        tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
-        part.write.mode("overwrite").parquet(tmp)
-        with open(_state_path(tmp), "w") as f:
-            json.dump({"applied_version": version}, f)
-        old = f"{dest}.old-{uuid.uuid4().hex}"
-        if os.path.isdir(dest):
-            os.rename(dest, old)
-        os.rename(tmp, dest)
-        shutil.rmtree(old, ignore_errors=True)
-
     def catch_up() -> None:
         # the commit stream is only the trigger: the floor inside the
         # table is the resume point, and the log serves the delta above it
@@ -206,7 +220,11 @@ def materialize_aggregate(
             # `top`, so later triggers for commits the rebuild covered
             # are no-ops.
             store = ChangelogStore(spark, src_root)
-            _swap_in(_aggregate(store.changelog(at_version=top)), top)
+            _swap_table(
+                dest,
+                _aggregate(store.changelog(at_version=top)),
+                {"applied_version": top},
+            )
             return
         _top, files = delta
         if not files:
@@ -225,7 +243,7 @@ def materialize_aggregate(
                     ]
                 )
             )
-        _swap_in(part, top)
+        _swap_table(dest, part, {"applied_version": top})
 
     return (
         stream_commits(spark, src_root)

@@ -49,6 +49,7 @@ from fluxdb_spark.streaming.follow import stream_commits
 from fluxdb_spark.streaming.materialize import (
     _recover,
     _state_path,
+    _swap_table,
     applied_version,
 )
 
@@ -223,25 +224,15 @@ def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
     def _rebuild(top: int) -> None:
         # the delta's source bytes are gone (rewritten history, or append
         # files a compaction merged away): rebuild from commit-level time
-        # travel into a staged directory and swap atomically (readers see
-        # the old index or the new one, never a half-rebuilt mixture;
-        # _recover heals a torn swap)
-        import json
-        import uuid
-
+        # travel and swap the table whole (readers see the old index or
+        # the new one, never a half-rebuilt mixture)
         store = ChangelogStore(spark, src_root)
-        full = transform(store.changelog(at_version=top))
-        tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
-        full.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"commit_hi={top}")
+        _swap_table(
+            dest,
+            transform(store.changelog(at_version=top)),
+            {"applied_version": top, "format": DERIVED_FORMAT},
+            f"commit_hi={top}",
         )
-        with open(_state_path(tmp), "w") as f:
-            json.dump({"applied_version": top, "format": DERIVED_FORMAT}, f)
-        old = f"{dest}.old-{uuid.uuid4().hex}"
-        if os.path.isdir(dest):
-            os.rename(dest, old)
-        os.rename(tmp, dest)
-        shutil.rmtree(old, ignore_errors=True)
 
     def catch_up() -> None:
         floor = applied_version(dest)
@@ -901,12 +892,12 @@ def compact_derived(
     at the current floor — the OPTIMIZE pass for a long-running
     maintainer, whose per-commit directories otherwise accumulate until
     the read-side file listing dominates (the same small-file economics
-    ChangelogStore.compact exists for). Same staged-swap discipline as
-    the rebuild path: readers see the old directory set or the single
-    new one, never a mixture; a torn swap heals via _recover. Run it
-    from maintenance, not concurrently with the maintainer (the swap
-    assumes one writer owns dest). Returns the number of directories
-    coalesced away.
+    ChangelogStore.compact exists for). It lands through the same table
+    swap as the rebuild path (`materialize._swap_table`): readers see
+    the old directory set or the single new one, never a mixture; a
+    torn swap heals via _recover. Run it from maintenance, not
+    concurrently with the maintainer (the swap assumes one writer owns
+    dest). Returns the number of directories coalesced away.
 
     With `fold_keys`, compaction also FOLDS: superseded versions are
     physically dropped so the table holds one row per key (`lww_fold` —
@@ -916,9 +907,6 @@ def compact_derived(
     queries still apply lww_latest, but on a fully folded prefix it is
     a no-op-sized aggregation. Idempotent under the read fold —
     lww_latest(folded) == lww_latest(raw) by construction."""
-    import json
-    import uuid
-
     _recover(dest)
     _check_format(dest)
     floor = applied_version(dest)
@@ -932,16 +920,12 @@ def compact_derived(
     )
     if fold_keys is not None:
         current = lww_fold(current, fold_keys)
-    tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
-    current.write.mode("overwrite").parquet(
-        os.path.join(tmp, f"commit_hi={floor}")
+    _swap_table(
+        dest,
+        current,
+        {"applied_version": floor, "format": DERIVED_FORMAT},
+        f"commit_hi={floor}",
     )
-    with open(_state_path(tmp), "w") as f:
-        json.dump({"applied_version": floor, "format": DERIVED_FORMAT}, f)
-    old = f"{dest}.old-{uuid.uuid4().hex}"
-    os.rename(dest, old)
-    os.rename(tmp, dest)
-    shutil.rmtree(old, ignore_errors=True)
     return len(dirs) - 1
 
 

@@ -47,13 +47,17 @@ def test_priority_names_all_exist():
 
 
 def test_priority_window_is_stale_first():
-    """Rotation guard (VERDICT r11 task 2): the driver stamps exactly the
-    first 50 _PRIORITY entries per round, so a window that still contains
-    entries stamped in the two NEWEST recorded rounds means the rotation
-    ritual was skipped and that round's validation budget re-checks
-    already-fresh rows.  This test goes red at the start of the round
-    after a window runs, forcing the one-reorder rotation before anything
-    else."""
+    """Window guard: the driver stamps exactly the first 50 _PRIORITY
+    entries per round, so a window holding entries stamped in the two
+    NEWEST recorded rounds spends that round's validation budget
+    re-checking already-fresh rows.  The order is derived, not kept by
+    hand: `catalog/_core.window_order` sorts the oracle entries by their
+    newest stamp in the committed CORRECTNESS_r*.json artifacts
+    (never-stamped first, then oldest), and _PRIORITY is that order as
+    names.  A red here means either `window_order` /
+    `correctness_stamps` no longer put stale entries first, or fewer
+    than 50 oracle entries are left unstamped by the two newest
+    artifacts, so no order can fill the window with stale ones."""
     import glob
     import json
     import re
@@ -85,8 +89,10 @@ def test_priority_window_is_stale_first():
     stale_window = [n for n in _PRIORITY[:50] if n in fresh]
     assert not stale_window, (
         f"window wastes slots on entries already stamped in rounds "
-        f"{[r for r, _ in rounds[-2:]]}: rotate _PRIORITY (move positions 51-100 to the "
-        f"front) -- {stale_window[:8]}..."
+        f"{[r for r, _ in rounds[-2:]]}: catalog/_core.window_order should "
+        f"order them after every stale oracle entry (check its sort key, "
+        f"and whether 50 oracle entries are still unstamped by those "
+        f"rounds) -- {stale_window[:8]}..."
     )
 
 

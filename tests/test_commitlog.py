@@ -20,6 +20,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
 from fluxdb_spark.store import ChangelogStore, CommitLog, WriteConsistencyError
 from fluxdb_spark.operators import state_at
 from tests.conftest import make_changelog
@@ -31,8 +32,15 @@ def store(spark, tmp_path):
 
 
 def batch(spark, heights, tablet="tbl", pk="001"):
-    return make_changelog(
-        spark, [("tst", tablet, h, pk, f"v{h}") for h in heights]
+    """Change-log rows as driver-held rows: a LocalRelation, as flushes
+    build."""
+    return local_frame(
+        spark,
+        [
+            ("tst", tablet, h, pk, f"v{h}", False, f"{h:08x}aa", h)
+            for h in heights
+        ],
+        CHANGELOG_SCHEMA,
     )
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
 from fluxdb_spark.store import (
     ChangelogStore,
     Checkpoint,
@@ -20,8 +21,15 @@ def store(spark, tmp_path):
 
 
 def batch(spark, heights, tablet="tbl", pk="001"):
-    return make_changelog(
-        spark, [("tst", tablet, h, pk, f"v{h}") for h in heights]
+    """Change-log rows as driver-held rows: a LocalRelation, as flushes
+    build."""
+    return local_frame(
+        spark,
+        [
+            ("tst", tablet, h, pk, f"v{h}", False, f"{h:08x}aa", h)
+            for h in heights
+        ],
+        CHANGELOG_SCHEMA,
     )
 
 
@@ -224,6 +232,23 @@ class TestIndexStore:
         ixs = IndexStore(spark, str(tmp_path / "fresh"))
         assert ixs.read().count() == 0
         assert ixs.prune(prune_frequency=2) == 0
+
+    def test_corrupt_index_raises_not_empty(self, spark, tmp_path):
+        """A corrupt index file fails the read loudly: read as an empty
+        index, prune and reindex would silently do nothing and indexed
+        reads would silently fall back to the full fold."""
+        import os
+
+        log, ixs = self._seed(spark, tmp_path)
+        assert ixs.read().count() > 0
+        for fn in os.listdir(ixs._dir):
+            if fn.endswith(".parquet"):
+                with open(os.path.join(ixs._dir, fn), "wb") as f:
+                    f.write(b"not a parquet file")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            ixs.read().count()
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            ixs.prune(prune_frequency=3)
 
     def test_reindex_dry_run_reports_without_writing(self, spark, tmp_path):
         log, ixs = self._seed(spark, tmp_path)
@@ -1237,20 +1262,6 @@ class TestStoreBackendSeam:
                 call()
 
 
-def local_batch(spark, heights, tablet="tbl", pk="001"):
-    """`batch` as driver-held rows: a LocalRelation, as flushes build."""
-    from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
-
-    return local_frame(
-        spark,
-        [
-            ("tst", tablet, h, pk, f"v{h}", False, f"{h:08x}aa", h)
-            for h in heights
-        ],
-        CHANGELOG_SCHEMA,
-    )
-
-
 def _band_files(root):
     """Data-file count per band directory of the store at `root`."""
     import os
@@ -1271,8 +1282,8 @@ class TestObservedBounds:
     def test_local_flush_is_one_spark_job(self, spark, tmp_path):
         sc = spark.sparkContext
         st = ChangelogStore(spark, str(tmp_path / "db"))
-        st.write_batch(local_batch(spark, range(1, 51)))  # warm, ckpt 50
-        df = local_batch(spark, range(51, 5_051))  # a 5,000-row flush
+        st.write_batch(batch(spark, range(1, 51)))  # warm, ckpt 50
+        df = batch(spark, range(51, 5_051))  # a 5,000-row flush
         sc.setJobGroup("one-job-flush", "flush")
         try:
             ckpt = st.write_batch(df)
@@ -1294,14 +1305,14 @@ class TestObservedBounds:
         import os
 
         st = ChangelogStore(spark, str(tmp_path / "db"))
-        st.write_batch(local_batch(spark, [1, 2, 3]))
+        st.write_batch(batch(spark, [1, 2, 3]))
         files = _band_files(st.root)
         version = st.latest_commit_version()
         if raises:
             with pytest.raises(WriteConsistencyError, match="hole detected"):
-                st.write_batch(local_batch(spark, heights))
+                st.write_batch(batch(spark, heights))
         else:
-            assert st.write_batch(local_batch(spark, heights)).height == 3
+            assert st.write_batch(batch(spark, heights)).height == 3
         assert not [
             d for d in os.listdir(st._staging_dir) if d.startswith("batch-")
         ]
@@ -1321,7 +1332,7 @@ class TestObservedBounds:
         assert empty.rdd.getNumPartitions() == 0
         st = ChangelogStore(spark, str(tmp_path / "db"))
         assert st.write_batch(empty) == Checkpoint(-1, None, None)
-        st.write_batch(local_batch(spark, [1, 2, 3]))
+        st.write_batch(batch(spark, [1, 2, 3]))
         assert st.write_batch(empty).height == 3
         assert not [
             d for d in os.listdir(st._staging_dir) if d.startswith("batch-")
@@ -1670,6 +1681,92 @@ class TestCrashFuzzStore:
             crash_at += 1
         assert exhausted
         assert crash_at >= 4
+
+
+class TestIndexPruneCrash:
+    """IndexStore.prune lands through the store's shared journaled swap:
+    crashed at every Python-side file op, the next open leaves exactly
+    the pre-prune or the post-prune index, with no side directory and no
+    journal behind."""
+
+    def _seed(self, spark, root):
+        from fluxdb_spark.operators.snapshot import build_tablet_index
+        from fluxdb_spark.store import IndexStore
+
+        log = make_changelog(
+            spark,
+            [("tst", "tbl", h, f"k{h % 2}", f"v{h}") for h in range(1, 6)],
+        )
+        ixs = IndexStore(spark, root)
+        for h in range(1, 6):
+            ixs.write(build_tablet_index(log, "tbl", h, collection="tst"))
+        return ixs
+
+    @staticmethod
+    def _rows(ixs):
+        return sorted(map(tuple, ixs.read().collect()))
+
+    def test_prune_crash_at_every_fileop(self, spark, tmp_path, monkeypatch):
+        import os
+        import shutil
+
+        from fluxdb_spark.store import IndexStore
+
+        seed = str(tmp_path / "seed")
+        pre = self._rows(self._seed(spark, seed))
+        clean = str(tmp_path / "clean")
+        shutil.copytree(seed, clean)
+        assert IndexStore(spark, clean).prune(prune_frequency=2) == 1
+        post = self._rows(IndexStore(spark, clean))
+        assert post != pre
+        crash_at = 0
+        exhausted = False
+        outcomes = []
+        while not exhausted and crash_at < 40:
+            root = str(tmp_path / f"ix-{crash_at}")
+            shutil.copytree(seed, root)
+            ixs = IndexStore(spark, root)
+            with monkeypatch.context() as mp:
+                _FileOpCrasher(mp, crash_at)
+                try:
+                    ixs.prune(prune_frequency=2)
+                    exhausted = True
+                except _CrashHere:
+                    pass
+            got = self._rows(IndexStore(spark, root))
+            assert got in (pre, post), f"crash_at={crash_at}"
+            outcomes.append(got == post)
+            # no tablet_index.rewrite-* / .old-* sibling, no journal
+            assert os.listdir(root) == ["tablet_index"], f"crash_at={crash_at}"
+            crash_at += 1
+        assert exhausted
+        # early crashes roll back, late ones complete: both were reached
+        assert outcomes[0] is False and outcomes[-1] is True
+        assert outcomes == sorted(outcomes)
+
+    def test_crash_after_second_rename_keeps_the_rewrite(
+        self, spark, tmp_path
+    ):
+        import json
+        import os
+        import shutil
+
+        from fluxdb_spark.store import IndexStore
+
+        root = str(tmp_path / "ix")
+        ixs = self._seed(spark, root)
+        pre = self._rows(ixs)
+        # both renames done, journal not yet removed: the index is the
+        # rewrite and `.old-*` still holds the replaced one
+        old = ixs._dir + ".old-x"
+        shutil.copytree(ixs._dir, old)
+        ixs._rewrite_swap(ixs.read().filter("snapshot_height != 3"))
+        post = self._rows(ixs)
+        assert post != pre
+        with open(ixs._journal, "w") as f:
+            json.dump({"new": ixs._dir + ".rewrite-x", "old": old}, f)
+        assert self._rows(IndexStore(spark, root)) == post
+        assert os.listdir(root) == ["tablet_index"]
 
 
 class TestOrcBackend:
