@@ -451,9 +451,9 @@ def cmd_index_retrieval(args, spark: SparkSession) -> int:
         # with --kind quantize for the rerank side
         transform = rt.binarize_transform(dim=args.dim)
     elif args.kind == "bpe":
-        # the frozen tokenizer (merge list) lives at a sidecar path like
-        # the centroid/PQ models: trained once on the store's live
-        # corpus, then every later document encodes map-only forever
+        # the frozen tokenizer (merge list) is a sidecar (materialize.py):
+        # trained once on the store's live corpus, then every later
+        # document encodes map-only forever
         merges = rt.load_bpe_merges(args.dest)
         if merges is None:
             from fluxdb_spark.functions.bpe import train_merges
@@ -466,9 +466,8 @@ def cmd_index_retrieval(args, spark: SparkSession) -> int:
             rt.save_bpe_merges(args.dest, merges)
         transform = rt.bpe_encode_transform(merges)
     elif args.kind == "pq":
-        # frozen PQ codebooks live at a sidecar path for the same
-        # swap-survival reason as the centroid model; trained once on
-        # the store's live corpus, then encode-forever
+        # frozen PQ codebooks are a sidecar too: trained once on the
+        # store's live corpus, then encode-forever
         books = rt.load_pq_books(args.dest)
         if books is None:
             from fluxdb_spark.functions.similarity import pq_codebooks
@@ -484,9 +483,8 @@ def cmd_index_retrieval(args, spark: SparkSession) -> int:
             rt.save_pq_books(args.dest, books)
         transform = rt.pq_codes_transform(books, dim=args.dim)
     else:
-        # the frozen model lives at a SIBLING path (<dest>._centroids
-        # .json) so rebuild-on-rewrite / compaction swaps of dest cannot
-        # drop it (load_centroids migrates the legacy in-dir file)
+        # the frozen model is the `<dest>._centroids.json` sidecar
+        # (load_centroids migrates the legacy in-dir file)
         cents = rt.load_centroids(args.dest)
         if cents is None:
             from pyspark.sql import functions as F

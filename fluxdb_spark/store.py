@@ -513,13 +513,11 @@ class CommitLog:
             files.difference_update(e.get("remove", ()))
             if e.get("action") == "rewrite":
                 floor = e["version"]
-        tmp = os.path.join(self.dir, f".ckpt-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(
-                {"version": version, "files": sorted(files), "floor": floor},
-                f,
-            )
-        os.replace(tmp, os.path.join(self.dir, self._ckpt_name(version)))
+        _replace_json(
+            os.path.join(self.dir, self._ckpt_name(version)),
+            {"version": version, "files": sorted(files), "floor": floor},
+            os.path.join(self.dir, f".ckpt-{uuid.uuid4().hex}"),
+        )
         for fname in os.listdir(self.dir):
             if (
                 fname.startswith("_ckpt-v")
@@ -611,6 +609,16 @@ def read_changelog_files(
     )
 
 
+def _replace_json(path: str, obj, tmp: str | None = None) -> None:
+    """The one atomic small-JSON write: dump `obj` to the temp file `tmp`
+    (default `<path>.tmp`), then `os.replace` it over `path`, so a reader
+    or a crash sees the old content or the new, never a torn file."""
+    tmp = path + ".tmp" if tmp is None else tmp
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def _discard_file(path: str) -> None:
     """Remove `path` if it is still there: two processes opening a store
     race recovery, so every cleanup tolerates the other side winning."""
@@ -656,10 +664,7 @@ def _journaled_swap(
             os.remove(os.path.join(new, junk))
     names = os.listdir(new)
     entry = {"new": new, "old": old, **describe(names)}
-    jtmp = journal + ".tmp"
-    with open(jtmp, "w") as f:
-        json.dump(entry, f)
-    os.replace(jtmp, journal)
+    _replace_json(journal, entry)
     os.rename(target, old)
     os.rename(new, target)
     after_swap(entry)
@@ -911,19 +916,16 @@ class FileChangelogBackend(StoreBackend):
         # manifest BEFORE any file reaches the band directories: lists every
         # target path, so recover() can roll a torn move back in full
         manifest = os.path.join(self.manifest_dir, f"batch-{batch_id}.json")
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "hi": int(bounds.hi),
-                    "shard": shard,
-                    "batch_id": batch_id,
-                    "targets": [dst for _src, dst in moves],
-                    "staging": staged.path,
-                },
-                f,
-            )
-        os.replace(tmp, manifest)  # atomic on POSIX
+        _replace_json(
+            manifest,
+            {
+                "hi": int(bounds.hi),
+                "shard": shard,
+                "batch_id": batch_id,
+                "targets": [dst for _src, dst in moves],
+                "staging": staged.path,
+            },
+        )
         for src, dst in moves:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.rename(src, dst)
@@ -1535,13 +1537,12 @@ class ChangelogStore:
         self, height: int, block_id: str | None, block_num: int | None,
         shard: str | None = None,
     ) -> None:
-        tmp = self._ckpt_path(shard) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"height": height, "block_id": block_id, "block_num": block_num},
-                f,
-            )
-        os.replace(tmp, self._ckpt_path(shard))  # atomic on POSIX
+        path = self._ckpt_path(shard)
+        _replace_json(
+            path,
+            {"height": height, "block_id": block_id, "block_num": block_num},
+            f"{path}.tmp-{uuid.uuid4().hex}",
+        )
 
     def delete_shard_checkpoints(self) -> int:
         """W5 — reference DeleteAllShardCheckpoints (write.go:196-198)."""
@@ -1651,16 +1652,13 @@ class ChangelogStore:
         meta_path = os.path.join(self.root, "_meta.json")
         if os.path.exists(meta_path):
             return
-        tmp_meta = meta_path + ".tmp"
-        with open(tmp_meta, "w") as f:
-            json.dump(
-                {
-                    "height_band": self.height_band,
-                    "data_format": self._backend.data_format,
-                },
-                f,
-            )
-        os.replace(tmp_meta, meta_path)
+        _replace_json(
+            meta_path,
+            {
+                "height_band": self.height_band,
+                "data_format": self._backend.data_format,
+            },
+        )
 
     def _maybe_size_stats(self, rows: DataFrame) -> None:
         """Per-tablet write-size observability (reference write.go:274-329,
@@ -1847,10 +1845,9 @@ class ChangelogStore:
                     self._backend._rel(f) for f in self._backend._data_files(p)
                 )
                 shutil.rmtree(p, ignore_errors=True)
-        tmp = os.path.join(self.root, "_retention.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"horizon": horizon}, f)
-        os.replace(tmp, os.path.join(self.root, "_retention.json"))
+        _replace_json(
+            os.path.join(self.root, "_retention.json"), {"horizon": horizon}
+        )
         # the truncation is a rewrite commit: it raises the time-travel
         # floor (history below the horizon is gone by design). A crash
         # before this claim leaves the floor too low; reads of the gap

@@ -1,4 +1,4 @@
-"""Incrementally-maintained aggregates over a ChangelogStore (IVM).
+"""Incrementally-maintained derived tables over a ChangelogStore (IVM).
 
 A serving dashboard over a 100 TB changelog cannot re-scan the log to
 refresh "rows per collection" or "max height per tablet" — the refresh
@@ -6,6 +6,33 @@ must cost O(newly committed rows) + O(aggregate table), not O(history).
 This module keeps a small aggregate table continuously up to date from
 the store's commit log, the materialized-view half of what the CDC
 follower (streaming/follow.py) provides as a raw row feed.
+
+Every derived table (these aggregates and the row-wise retrieval tables
+of streaming/retrieval.py) keeps three rules, each implemented once here:
+
+- **State file.** `<dest>/_mat_state.json` holds the applied-version
+  floor (plus `format` on the row-wise tables); `_read_state` is its one
+  reader and `_write_state` its one writer. A missing file means "no
+  state yet". An unparsable one, or one without `applied_version`,
+  raises ValueError ("unreadable or corrupt"): read as empty, it would
+  hide every row and make the next catch-up fold the whole log again.
+- **Sidecars.** Trained models and cached stats live at the SIBLING
+  `<dest>._<kind>.json` (`_sidecar_path`; kinds `centroids`, `pq_books`,
+  `bpe_merges`, `stats`), never inside dest: a rebuild or compaction
+  replaces dest wholesale, and a model inside would vanish, so the next
+  run would train a second one and split the table between two models.
+  `_recover` scans the `<dest>.` prefix but drops only `.old-` / `.tmp-`
+  siblings. A missing sidecar reads as None and a corrupt one raises,
+  as for the state file (`_load_json`).
+- **Catch-up loop** (`_catch_up`): floor -> `CommitLog.latest_version`
+  -> `CommitLog.appends_between` -> rebuild from the time-travel read at
+  `top` when the log cannot serve the delta, else fold only the delta's
+  files. A table kind supplies just its rebuild and its fold. The
+  continuous maintainers (`_maintain`) use the commit stream only as a
+  trigger for the same loop, so a one-shot refresh and a streaming
+  maintainer leave identical tables.
+
+State and sidecars are written through `store._replace_json`.
 
 Exactly-once is anchored to COMMIT VERSIONS, not stream batch ids: the
 applied-version floor travels INSIDE the aggregate table directory
@@ -43,7 +70,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fluxdb_spark.store import ChangelogStore, CommitLog, read_changelog_files
+from fluxdb_spark.store import (
+    ChangelogStore,
+    CommitLog,
+    _replace_json,
+    read_changelog_files,
+)
 from fluxdb_spark.streaming.follow import stream_commits
 
 _MERGE = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -57,6 +89,46 @@ def _state_path(dest: str) -> str:
     # underscore prefix: invisible to Spark's directory scans, so the
     # state rides inside the table dir and swaps atomically with it
     return os.path.join(dest, "_mat_state.json")
+
+
+def _load_json(path: str, parse=lambda obj: obj):
+    """`parse` of the JSON at `path`, or None when there is no file. An
+    unreadable or unparsable file, or one `parse` rejects, raises
+    ValueError: read as "absent", corrupt state would pass silently."""
+    try:
+        with open(path) as f:
+            return parse(json.load(f))
+    except FileNotFoundError:
+        return None
+    except (OSError, ValueError, KeyError, TypeError, AttributeError) as e:
+        raise ValueError(
+            f"derived table state {path} is unreadable or corrupt ({e})."
+            " Rebuild the table (delete it and its `<dest>._*.json`"
+            " sidecars, then re-run refresh / index-retrieval)"
+        ) from e
+
+
+def _read_state(dest: str) -> dict | None:
+    return _load_json(
+        _state_path(dest),
+        lambda s: dict(s, applied_version=int(s["applied_version"])),
+    )
+
+
+def _write_state(dest: str, state: dict) -> None:
+    _replace_json(_state_path(dest), state)
+
+
+def _sidecar_path(dest: str, kind: str) -> str:
+    return dest.rstrip("/") + f"._{kind}.json"
+
+
+def _save_sidecar(dest: str, kind: str, obj) -> None:
+    path = _sidecar_path(dest, kind)
+    parent = os.path.dirname(path)
+    if parent:
+        os.makedirs(parent, exist_ok=True)
+    _replace_json(path, obj)
 
 
 def _recover(dest: str, grace_s: float = 0.5) -> None:
@@ -132,8 +204,7 @@ def _swap_table(
     df.write.mode("overwrite").parquet(
         tmp if part is None else os.path.join(tmp, part)
     )
-    with open(_state_path(tmp), "w") as f:
-        json.dump(state, f)
+    _write_state(tmp, state)
     old = f"{dest}.old-{uuid.uuid4().hex}"
     if os.path.isdir(dest):
         os.rename(dest, old)
@@ -142,12 +213,65 @@ def _swap_table(
 
 
 def applied_version(dest: str) -> int:
+    """The commit version dest has folded (0 = no state yet)."""
     _recover(dest)
-    try:
-        with open(_state_path(dest)) as f:
-            return int(json.load(f)["applied_version"])
-    except (FileNotFoundError, KeyError, ValueError):
-        return 0
+    state = _read_state(dest)
+    return 0 if state is None else state["applied_version"]
+
+
+def _catch_up(spark: SparkSession, src_root: str, dest: str, rebuild, fold):
+    """The one catch-up loop (module docstring) for the table at `dest`:
+    `rebuild(rows, top)` replaces the table with one derived from the
+    store's rows at commit version `top`; `fold(rows, floor, top)` adds
+    the rows of the append commits in (floor, top]. Returns the
+    argument-free catch-up pass."""
+    log = CommitLog(src_root)
+
+    def catch_up() -> None:
+        # the floor inside the table is the resume point, and the log
+        # serves the delta above it
+        floor = applied_version(dest)
+        top = log.latest_version()
+        if top <= floor:
+            return
+        delta = log.appends_between(floor, top)
+        if delta is None:
+            # The delta cannot be folded: a non-compacting rewrite
+            # (expire / delete_where / redact_where) re-placed or erased
+            # rows the table already folded, or a compaction merged
+            # away append files not yet folded. Rebuild instead: one
+            # commit-level time-travel read at `top` — O(store) once per
+            # such rewrite, never a wrong answer. The floor advances to
+            # `top`, so later triggers for commits the rebuild covered
+            # are no-ops.
+            store = ChangelogStore(spark, src_root)
+            rebuild(store.changelog(at_version=top), top)
+            return
+        _top, files = delta
+        if not files:
+            return  # compactions of already-folded files change nothing
+        fold(read_changelog_files(spark, src_root, files), floor, top)
+
+    return catch_up
+
+
+def _maintain(
+    spark: SparkSession,
+    src_root: str,
+    catch_up,
+    checkpoint_dir: str,
+    trigger_seconds: float,
+):
+    """Start a continuous maintainer: every micro-batch of `src_root`'s
+    commit stream runs `catch_up()`. The stream is only the trigger; the
+    batch's entries are never read. Returns the StreamingQuery."""
+    return (
+        stream_commits(spark, src_root)
+        .writeStream.foreachBatch(lambda _df, _batch_id: catch_up())
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
 
 
 def read_aggregate(spark: SparkSession, dest: str) -> DataFrame | None:
@@ -193,7 +317,6 @@ def materialize_aggregate(
                 f"unsupported merge '{merge}': algebraic merges are "
                 f"{sorted(_MERGE)}"
             )
-    log = CommitLog(src_root)
 
     def _aggregate(rows: DataFrame) -> DataFrame:
         if pre is not None:
@@ -202,34 +325,11 @@ def materialize_aggregate(
             *[F.expr(expr).alias(name) for name, expr, _m in aggs]
         )
 
-    def catch_up() -> None:
-        # the commit stream is only the trigger: the floor inside the
-        # table is the resume point, and the log serves the delta above it
-        floor = applied_version(dest)
-        top = log.latest_version()
-        if top <= floor:
-            return
-        delta = log.appends_between(floor, top)
-        if delta is None:
-            # The delta cannot be folded: a non-compacting rewrite
-            # (expire / delete_where / redact_where) re-placed or erased
-            # rows the aggregate already folded, or a compaction merged
-            # away append files not yet folded. Rebuild instead: one
-            # commit-level time-travel read at `top` — O(store) once per
-            # such rewrite, never a wrong answer. The floor advances to
-            # `top`, so later triggers for commits the rebuild covered
-            # are no-ops.
-            store = ChangelogStore(spark, src_root)
-            _swap_table(
-                dest,
-                _aggregate(store.changelog(at_version=top)),
-                {"applied_version": top},
-            )
-            return
-        _top, files = delta
-        if not files:
-            return  # compactions of already-folded files change nothing
-        part = _aggregate(read_changelog_files(spark, src_root, files))
+    def rebuild(rows: DataFrame, top: int) -> None:
+        _swap_table(dest, _aggregate(rows), {"applied_version": top})
+
+    def fold(rows: DataFrame, _floor: int, top: int) -> None:
+        part = _aggregate(rows)
         cur = read_aggregate(spark, dest)
         if cur is not None:
             part = (
@@ -245,10 +345,10 @@ def materialize_aggregate(
             )
         _swap_table(dest, part, {"applied_version": top})
 
-    return (
-        stream_commits(spark, src_root)
-        .writeStream.foreachBatch(lambda _df, _batch_id: catch_up())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _maintain(
+        spark,
+        src_root,
+        _catch_up(spark, src_root, dest, rebuild, fold),
+        checkpoint_dir,
+        trigger_seconds,
     )

@@ -15,11 +15,10 @@ land the output under `dest/commit_hi=<version>/`. Exactly-once comes
 from IDEMPOTENT REPLAY, not an atomic data+state commit: derived batch
 directories are named by the commit version they cover, unconfirmed
 directories above the applied-version floor are dropped and rewritten on
-redelivery, and readers only see directories at-or-below the floor. When
-the log cannot serve the delta (`CommitLog.appends_between`: a DML /
-retention rewrite, or a compaction that merged away unapplied append
-files) the maintainer rebuilds from commit-level time travel — the same
-rule the aggregate maintainer applies.
+redelivery, and readers only see directories at-or-below the floor. The
+state file, the model sidecars and the catch-up loop (with its rebuild
+when the log cannot serve the delta) are the rules every derived table
+shares; materialize.py's module docstring states them.
 
 Updates and deletes flow WITHOUT rewrites too: derived rows carry
 (height, is_deletion), and `lww_latest` applies the store's
@@ -44,12 +43,16 @@ from pyspark.sql import types as T
 
 from fluxdb_spark.schema import local_frame
 from fluxdb_spark.session import spread
-from fluxdb_spark.store import ChangelogStore, CommitLog, read_changelog_files
-from fluxdb_spark.streaming.follow import stream_commits
 from fluxdb_spark.streaming.materialize import (
+    _catch_up,
+    _load_json,
+    _maintain,
+    _read_state,
     _recover,
-    _state_path,
+    _save_sidecar,
+    _sidecar_path,
     _swap_table,
+    _write_state,
     applied_version,
 )
 
@@ -90,30 +93,12 @@ format that does not match this constant is refused loudly up front
 instead."""
 
 
-def _stored_format(dest: str) -> int | None:
-    """The format stamp in dest's state file: None when the dest has
-    no confirmed state yet (fresh dir), 1 when the state predates
-    format stamping. An unreadable or corrupt state file raises: read
-    as "no state", it would make read_derived return no rows."""
-    import json
-
-    path = _state_path(dest)
-    try:
-        with open(path) as f:
-            return int(json.load(f).get("format", 1))
-    except FileNotFoundError:
-        return None
-    except (OSError, ValueError, AttributeError, TypeError) as e:
-        raise ValueError(
-            f"derived table state {path} is unreadable or corrupt ({e})."
-            " Rebuild the index (delete the directory and re-run "
-            "refresh / index-retrieval)"
-        ) from e
-
-
 def _check_format(dest: str) -> None:
-    got = _stored_format(dest)
-    if got is not None and got != DERIVED_FORMAT:
+    """Refuse a dest whose state file stamps another format (a state
+    that predates stamping is format 1; a fresh dest has no state)."""
+    state = _read_state(dest)
+    got = DERIVED_FORMAT if state is None else int(state.get("format", 1))
+    if got != DERIVED_FORMAT:
         raise ValueError(
             f"derived table at {dest} was written with on-disk format "
             f"{got}; this code reads and writes format {DERIVED_FORMAT}."
@@ -123,7 +108,12 @@ def _check_format(dest: str) -> None:
         )
 
 
-def _confirmed_dirs(dest: str, floor: int) -> list[str]:
+def _batch_dirs(
+    dest: str, after: float = float("-inf"), up_to: float = float("inf")
+) -> list[str]:
+    """The batch directories `dest/commit_hi=<v>` with after < v <= up_to,
+    in path order: at or below the floor they are confirmed, above it
+    they are a crashed batch's leftovers."""
     if not os.path.isdir(dest):
         return []
     out = []
@@ -134,9 +124,9 @@ def _confirmed_dirs(dest: str, floor: int) -> list[str]:
             hi = int(name.split("=", 1)[1])
         except ValueError:
             continue
-        if hi <= floor:
+        if after < hi <= up_to:
             out.append(os.path.join(dest, name))
-    return out
+    return sorted(out)
 
 
 def read_derived(spark: SparkSession, dest: str) -> DataFrame | None:
@@ -145,12 +135,12 @@ def read_derived(spark: SparkSession, dest: str) -> DataFrame | None:
     a crashed batch's unconfirmed directory is invisible."""
     _recover(dest)
     _check_format(dest)
-    dirs = _confirmed_dirs(dest, applied_version(dest))
+    dirs = _batch_dirs(dest, up_to=applied_version(dest))
     if not dirs:
         return None
     return (
         spark.read.option("basePath", dest)
-        .parquet(*sorted(dirs))
+        .parquet(*dirs)
         .drop("commit_hi")
     )
 
@@ -180,80 +170,46 @@ def lww_latest(df: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
-    """Build the catch-up shared by BOTH maintenance drivers: the
-    continuous streaming maintainer (`materialize_rowwise`, whose commit
-    stream is only the trigger) and the one-shot batch catch-up
-    (`refresh` / `refresh_many`).  Single code path = the derived
-    directories are byte-identical whichever driver ran: applied_version
-    floor -> `CommitLog.appends_between` -> delta file read ->
-    deterministic transform -> versioned directory write, or a rebuild
-    at the log's top when the range cannot be read as a delta.  The
-    floor file is the resume point, so a catch-up opens only the commit
-    entries above it."""
+    """The row-wise table's catch-up: the shared loop of
+    materialize.py's module docstring (`materialize._catch_up`), with a
+    rebuild that swaps in `transform` of the store at `top` as the one
+    directory `commit_hi=<top>`, and a fold that lands the delta's
+    derived rows under `dest/commit_hi=<top>/` before it advances the
+    floor. Both maintenance drivers run it — the continuous
+    `materialize_rowwise` and the one-shot `refresh` / `refresh_many` —
+    so the derived directories are byte-identical whichever one ran."""
     # refuse to append format-N rows into a dest built by a different
     # layout generation — the caller must rebuild instead
     _check_format(dest)
-    log = CommitLog(src_root)
 
-    def _commit(df: DataFrame, version: int, floor: int) -> None:
-        # drop unconfirmed leftovers of a crashed batch, then land the
-        # new directory and advance the floor; a crash between the two
-        # steps replays idempotently (the directory is keyed by version
-        # and rewritten from the same deterministic inputs)
-        for name in os.listdir(dest) if os.path.isdir(dest) else []:
-            if not name.startswith("commit_hi="):
-                continue
-            try:
-                hi = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if hi > floor:
-                shutil.rmtree(os.path.join(dest, name), ignore_errors=True)
-        df.write.mode("overwrite").parquet(
-            os.path.join(dest, f"commit_hi={version}")
-        )
-        import json
-
-        tmp = _state_path(dest) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"applied_version": version, "format": DERIVED_FORMAT}, f
-            )
-        os.replace(tmp, _state_path(dest))
-
-    def _rebuild(top: int) -> None:
-        # the delta's source bytes are gone (rewritten history, or append
-        # files a compaction merged away): rebuild from commit-level time
-        # travel and swap the table whole (readers see the old index or
-        # the new one, never a half-rebuilt mixture)
-        store = ChangelogStore(spark, src_root)
+    def rebuild(rows: DataFrame, top: int) -> None:
+        # swap the table whole: readers see the old index or the new
+        # one, never a half-rebuilt mixture
         _swap_table(
             dest,
-            transform(store.changelog(at_version=top)),
+            transform(rows),
             {"applied_version": top, "format": DERIVED_FORMAT},
             f"commit_hi={top}",
         )
 
-    def catch_up() -> None:
-        floor = applied_version(dest)
-        top = log.latest_version()
-        if top <= floor:
-            return
-        delta = log.appends_between(floor, top)
-        if delta is None:
-            _rebuild(top)
-            return
-        _top, files = delta
-        if not files:
-            return  # only compactions of already-applied files
-        rows = read_changelog_files(spark, src_root, files)
+    def fold(rows: DataFrame, floor: int, top: int) -> None:
         # a small delta arrives as few splits and would run the
         # (map-heavy: signatures, bucket hashes) transform on as few
         # tasks; spread() fans it across the cores and is a no-op once
         # the delta already has enough splits
-        _commit(transform(spread(rows)), top, floor)
+        derived = transform(spread(rows))
+        # drop unconfirmed leftovers of a crashed batch, then land the
+        # new directory and advance the floor; a crash between the two
+        # steps replays idempotently (the directory is keyed by version
+        # and rewritten from the same deterministic inputs)
+        for leftover in _batch_dirs(dest, after=floor):
+            shutil.rmtree(leftover, ignore_errors=True)
+        derived.write.mode("overwrite").parquet(
+            os.path.join(dest, f"commit_hi={top}")
+        )
+        _write_state(dest, {"applied_version": top, "format": DERIVED_FORMAT})
 
-    return catch_up
+    return _catch_up(spark, src_root, dest, rebuild, fold)
 
 
 def materialize_rowwise(
@@ -274,13 +230,12 @@ def materialize_rowwise(
     commits' files (O(delta)); the transform is map-only for every
     shipped index (signatures, buckets, centroid assignment), so no
     shuffle at all; the corpus is never re-read except on a rebuild."""
-    catch_up = _rowwise_processor(spark, src_root, dest, transform)
-    return (
-        stream_commits(spark, src_root)
-        .writeStream.foreachBatch(lambda _df, _batch_id: catch_up())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _maintain(
+        spark,
+        src_root,
+        _rowwise_processor(spark, src_root, dest, transform),
+        checkpoint_dir,
+        trigger_seconds,
     )
 
 
@@ -490,69 +445,32 @@ def span_hash_transform(width: int | None = None):
 
 
 
-def pq_books_path(dest: str) -> str:
-    """Frozen PQ codebook location — a SIBLING of the derived table for
-    the same reason as `centroids_path`: rebuild-on-rewrite and
-    compaction replace the dest directory wholesale, and a model stored
-    inside would silently vanish, splitting the table across two
-    trainings."""
-    return dest.rstrip("/") + "._pq_books.json"
+# The frozen models and cached stats below are sidecars: the sibling
+# files `<dest>._<kind>.json` of materialize.py's sidecar rule.
 
 
 def load_pq_books(dest: str) -> list | None:
     """Read the frozen codebooks (None if never trained)."""
-    import json
-
-    path = pq_books_path(dest)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+    return _load_json(_sidecar_path(dest, "pq_books"))
 
 
 def save_pq_books(dest: str, books: list) -> None:
-    """Persist freshly trained codebooks (atomic replace)."""
-    import json
-
-    path = pq_books_path(dest)
-    parent = os.path.dirname(path)
-    if parent:
-        os.makedirs(parent, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(books, f)
-    os.replace(tmp, path)
-
-
-def bpe_merges_path(dest: str) -> str:
-    """Frozen BPE merge-list location — a sibling of the derived table
-    (same swap-survival reasoning as `centroids_path`/`pq_books_path`):
-    the tokenizer is trained ONCE on the corpus and must outlive
-    rebuild-on-rewrite and compaction, or two halves of the encoded
-    table would disagree on the vocabulary."""
-    return dest.rstrip("/") + "._bpe_merges.json"
+    """Persist freshly trained codebooks."""
+    _save_sidecar(dest, "pq_books", books)
 
 
 def load_bpe_merges(dest: str) -> list | None:
-    import json
-
-    path = bpe_merges_path(dest)
-    if not os.path.exists(path):
-        return None
-    return [tuple(m) for m in json.load(open(path))]
+    """Read the frozen BPE merge list (None if never trained): trained
+    ONCE on the corpus, so both halves of an encoded table that outlived
+    a rebuild or compaction agree on the vocabulary."""
+    return _load_json(
+        _sidecar_path(dest, "bpe_merges"),
+        lambda merges: [tuple(m) for m in merges],
+    )
 
 
 def save_bpe_merges(dest: str, merges: list) -> None:
-    import json
-
-    path = bpe_merges_path(dest)
-    parent = os.path.dirname(path)
-    if parent:
-        os.makedirs(parent, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump([list(m) for m in merges], f)
-    os.replace(tmp, path)
+    _save_sidecar(dest, "bpe_merges", [list(m) for m in merges])
 
 
 def bpe_encode_transform(merges: list):
@@ -684,24 +602,13 @@ def bm25_postings_transform():
     return transform
 
 
-def bm25_stats_path(doclen_dest: str) -> str:
-    """Cached (n_docs, tot_dl) corpus statistics — a SIBLING of the
-    doclen table (same reasoning as centroids_path: dest-directory swaps
-    must not drop it)."""
-    return doclen_dest.rstrip("/") + "._stats.json"
-
-
 def load_bm25_stats(doclen_dest: str) -> tuple[int, int] | None:
-    """The cached stats, or None if never refreshed. Returns
-    (n_docs, tot_dl)."""
-    import json
-
-    try:
-        with open(bm25_stats_path(doclen_dest)) as f:
-            d = json.load(f)
-        return int(d["n_docs"]), int(d["tot_dl"])
-    except (OSError, KeyError, ValueError):
-        return None
+    """The cached corpus stats (n_docs, tot_dl) beside the doclen table,
+    or None if never refreshed."""
+    return _load_json(
+        _sidecar_path(doclen_dest, "stats"),
+        lambda d: (int(d["n_docs"]), int(d["tot_dl"])),
+    )
 
 
 def bm25_refresh(
@@ -717,8 +624,6 @@ def bm25_refresh(
     (count + sum over the live doclen fold) and costs O(#docs) over a
     2-column table ONCE PER REFRESH — never per query, never O(corpus
     text). Returns (n_docs, tot_dl)."""
-    import json
-
     del checkpoint_root  # the floor files, not stream offsets, dedup work
     _, doclen = refresh_many(
         spark,
@@ -737,34 +642,23 @@ def bm25_refresh(
             F.sum(F.greatest(F.col("dl"), F.lit(0))).cast("long").alias("t"),
         ).collect()[0]
         n_docs, tot = int(row.n), int(row.t or 0)
-    path = bm25_stats_path(doclen_dest)
-    parent = os.path.dirname(path)
-    if parent:
-        os.makedirs(parent, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "n_docs": n_docs,
-                "tot_dl": tot,
-                "applied_version": applied_version(doclen_dest),
-            },
-            f,
-        )
-    os.replace(tmp, path)
+    _save_sidecar(
+        doclen_dest,
+        "stats",
+        {
+            "n_docs": n_docs,
+            "tot_dl": tot,
+            "applied_version": applied_version(doclen_dest),
+        },
+    )
     return n_docs, tot
 
 
 def centroids_path(dest: str) -> str:
-    """Frozen-centroid model location: a SIBLING of the derived table
-    (`<dest>._centroids.json`), never inside it — rebuild-on-rewrite and
-    compact_derived replace the entire dest directory via staged swap,
-    and a model stored inside would be silently lost; the next run would
-    retrain a second model and assign only new batches to it, mixing
-    assignments from two models (breaking train-once/assign-forever).
-    The sibling name shares the `<dest>.` prefix _recover scans but is
-    not an `.old-`/`.tmp-` directory, so recovery never touches it."""
-    return dest.rstrip("/") + "._centroids.json"
+    """The frozen-centroid model's sidecar, `<dest>._centroids.json`:
+    kept apart from the table so one model serves every assignment
+    (train-once / assign-forever)."""
+    return _sidecar_path(dest, "centroids")
 
 
 def load_centroid_model(dest: str) -> dict | None:
@@ -773,18 +667,11 @@ def load_centroid_model(dest: str) -> dict | None:
     fields written by centroid_drift}. A legacy bare-list file (or a
     legacy in-directory `_centroids.json`, lost on the next swap) is
     migrated to the dict form at the sibling path on sight."""
-    import json
-
-    path = centroids_path(dest)
-    model = None
-    if os.path.exists(path):
-        with open(path) as f:
-            model = json.load(f)
-    else:
+    model = _load_json(centroids_path(dest))
+    if model is None:
         legacy = os.path.join(dest, "_centroids.json")
-        if os.path.exists(legacy):
-            with open(legacy) as f:
-                model = json.load(f)
+        model = _load_json(legacy)
+        if model is not None:
             try:
                 os.remove(legacy)
             except OSError:
@@ -793,7 +680,7 @@ def load_centroid_model(dest: str) -> dict | None:
         return None
     if isinstance(model, list):
         model = {"centroids": model, "baseline_mean_dist": None}
-        _write_centroid_model(dest, model)
+        _save_sidecar(dest, "centroids", model)
     return model
 
 
@@ -809,23 +696,11 @@ def save_centroids(
     """Persist a freshly trained model. `baseline_mean_dist` is the mean
     assignment distance over the TRAINING corpus — the yardstick
     centroid_drift compares later delta batches against."""
-    _write_centroid_model(
+    _save_sidecar(
         dest,
+        "centroids",
         {"centroids": cents, "baseline_mean_dist": baseline_mean_dist},
     )
-
-
-def _write_centroid_model(dest: str, model: dict) -> None:
-    import json
-
-    path = centroids_path(dest)
-    parent = os.path.dirname(path)
-    if parent:
-        os.makedirs(parent, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(model, f)
-    os.replace(tmp, path)
 
 
 def centroid_drift(
@@ -848,16 +723,12 @@ def centroid_drift(
     if model is None:
         return None
     floor_now = applied_version(dest)
-    dirs = [
-        d
-        for d in _confirmed_dirs(dest, floor_now)
-        if int(os.path.basename(d).split("=", 1)[1]) > floor_before
-    ]
+    dirs = _batch_dirs(dest, floor_before, floor_now)
     if not dirs:
         return None
     delta = (
         spark.read.option("basePath", dest)
-        .parquet(*sorted(dirs))
+        .parquet(*dirs)
         .filter(~F.col("is_deletion"))
     )
     row = delta.agg(
@@ -876,7 +747,7 @@ def centroid_drift(
             "drift_threshold": threshold,
         }
     )
-    _write_centroid_model(dest, model)
+    _save_sidecar(dest, "centroids", model)
     return {
         "delta_rows": int(row.n),
         "delta_mean_dist": float(row.mean_dist),
@@ -910,14 +781,10 @@ def compact_derived(
     _recover(dest)
     _check_format(dest)
     floor = applied_version(dest)
-    dirs = _confirmed_dirs(dest, floor)
+    dirs = _batch_dirs(dest, up_to=floor)
     if len(dirs) <= 1:
         return 0
-    current = (
-        spark.read.option("basePath", dest)
-        .parquet(*sorted(dirs))
-        .drop("commit_hi")
-    )
+    current = read_derived(spark, dest)
     if fold_keys is not None:
         current = lww_fold(current, fold_keys)
     _swap_table(
@@ -1003,19 +870,25 @@ class RetrievalService:
                 out["fluxdb_bm25_total_tokens"] = stats[1]
         return out
 
+    def _standing(self, dest: str | None, kind: str) -> DataFrame:
+        """The derived relation of the `kind` index at `dest`; raises
+        ValueError when that index is not configured or still empty."""
+        if dest is None:
+            raise ValueError(f"no {kind} index configured")
+        derived = read_derived(self.spark, dest)
+        if derived is None:
+            raise ValueError(f"{kind} index is empty — run index-retrieval")
+        return derived
+
     def ann_topk(self, vector: list[float], k: int = 10) -> DataFrame:
         """Approximate top-k neighbors of `vector` from the materialized
         bucket table: the probe is hashed with the index's own seeded
         hyperplanes, so it collides with exactly the candidates the
         maintainer bucketed — per query, a bucket equi-join over the
         standing table, no corpus pass."""
-        if self.ann_dest is None:
-            raise ValueError("no ANN index configured")
         from fluxdb_spark.functions.similarity import lsh_topk_from_buckets
 
-        derived = read_derived(self.spark, self.ann_dest)
-        if derived is None:
-            raise ValueError("ANN index is empty — run index-retrieval")
+        derived = self._standing(self.ann_dest, "ANN")
         buckets = lsh_live_buckets(derived)
         probe = local_frame(
             self.spark, [(-1, [float(x) for x in vector])], _VECTOR_PROBE
@@ -1028,14 +901,10 @@ class RetrievalService:
         """BM25 top-k over the materialized postings, with the corpus
         stats cached at the last refresh — O(term-matched postings) per
         query."""
-        if self.bm25_postings_dest is None or self.bm25_doclen_dest is None:
-            raise ValueError("no BM25 index configured")
         from fluxdb_spark.functions.text import bm25_from_postings
 
-        postings = read_derived(self.spark, self.bm25_postings_dest)
-        doclen = read_derived(self.spark, self.bm25_doclen_dest)
-        if postings is None or doclen is None:
-            raise ValueError("BM25 index is empty — run index-retrieval")
+        postings = self._standing(self.bm25_postings_dest, "BM25")
+        doclen = self._standing(self.bm25_doclen_dest, "BM25")
         return bm25_from_postings(
             postings,
             doclen,
@@ -1054,20 +923,16 @@ class RetrievalService:
         cluster-filtered read is the standing-service twin of
         `similarity.ivf_topk`'s corpus pass. n_probe trades recall for
         read volume; n_probe = n_centroids is exhaustive."""
-        if self.kmeans_dest is None:
-            raise ValueError("no kmeans index configured")
         from fluxdb_spark.functions.similarity import (
             ivf_topk_from_assignments,
         )
 
+        derived = self._standing(self.kmeans_dest, "kmeans")
         model = load_centroid_model(self.kmeans_dest)
         if model is None:
             raise ValueError(
                 "kmeans index has no trained model — run index-retrieval"
             )
-        derived = read_derived(self.spark, self.kmeans_dest)
-        if derived is None:
-            raise ValueError("kmeans index is empty — run index-retrieval")
         if "embedding" not in derived.columns:
             raise ValueError(
                 "kmeans index predates embedding-carrying assignments — "
@@ -1091,16 +956,12 @@ class RetrievalService:
         standing signature table, and scored with the MinHash Jaccard
         estimate — the admission check an ingestion pipeline runs BEFORE
         adding a document. Top-k by estimate, `threshold` floors it."""
-        if self.minhash_dest is None:
-            raise ValueError("no minhash index configured")
         from fluxdb_spark.functions.dedup import (
             minhash_probe_candidates,
             minhash_signatures,
         )
 
-        derived = read_derived(self.spark, self.minhash_dest)
-        if derived is None:
-            raise ValueError("minhash index is empty — run index-retrieval")
+        derived = self._standing(self.minhash_dest, "minhash")
         sigs = lww_latest(derived, ["doc_id"])
         probe = minhash_signatures(
             local_frame(self.spark, [(-1, str(text))], _TEXT_PROBE)
@@ -1122,17 +983,11 @@ class RetrievalService:
         scale-invariant integer arithmetic — the ranking is
         bit-deterministic. By-id is the serving shape for "more like this
         stored item"; an unseen vector goes through ann/ivf instead."""
-        if self.quantize_dest is None:
-            raise ValueError("no quantize index configured")
         from fluxdb_spark.functions.similarity import (
             quantized_topk_from_table,
         )
 
-        derived = read_derived(self.spark, self.quantize_dest)
-        if derived is None:
-            raise ValueError(
-                "quantize index is empty — run index-retrieval"
-            )
+        derived = self._standing(self.quantize_dest, "quantize")
         qz = lww_latest(derived, ["vec_id"]).select(
             "vec_id", "q8", "scale_e9"
         )
@@ -1148,22 +1003,16 @@ class RetrievalService:
         with exact integer cosine — the cheapest standing candidate scan
         the service offers, and still bit-deterministic. Requires both
         the binary and quantize indexes (they compose)."""
-        if self.binary_dest is None:
-            raise ValueError("no binary index configured")
-        if self.quantize_dest is None:
-            raise ValueError(
-                "binary rerank needs the quantize index too"
-            )
         from fluxdb_spark.functions.similarity import (
             binary_topk_from_tables,
         )
 
-        bderived = read_derived(self.spark, self.binary_dest)
-        qderived = read_derived(self.spark, self.quantize_dest)
-        if bderived is None or qderived is None:
+        bderived = self._standing(self.binary_dest, "binary")
+        if self.quantize_dest is None:
             raise ValueError(
-                "binary/quantize index is empty — run index-retrieval"
+                "binary rerank needs the quantize index too"
             )
+        qderived = self._standing(self.quantize_dest, "quantize")
         word_cols = sorted(
             (c for c in bderived.columns if c[0] == "b" and c[1:].isdigit()),
             key=lambda c: int(c[1:]),
@@ -1185,8 +1034,6 @@ class RetrievalService:
         run at SERVING time, before a document (or benchmark question)
         is admitted. Per probe the cost is |probe shingles| lookups
         against the index, never a corpus pass."""
-        if self.spans_dest is None:
-            raise ValueError("no span index configured")
         from fluxdb_spark.functions.dedup import (
             SPAN_WIDTH,
             merge_spans,
@@ -1195,9 +1042,7 @@ class RetrievalService:
         from fluxdb_spark.functions.hashing import hash60
 
         width = SPAN_WIDTH if width is None else width
-        derived = read_derived(self.spark, self.spans_dest)
-        if derived is None:
-            raise ValueError("span index is empty — run index-retrieval")
+        derived = self._standing(self.spans_dest, "span")
         # lww_latest drops tombstoned docs; the null-marker rows of the
         # outer explode guarantee every (doc, height) version is present
         live_h = lww_latest(
@@ -1252,18 +1097,14 @@ class RetrievalService:
         (train-once / encode-forever, like the centroid model), and the
         scan side is m small ints per vector — the 64x-compressed
         corpus, never the float vectors."""
-        if self.pq_dest is None:
-            raise ValueError("no PQ index configured")
         from fluxdb_spark.functions.similarity import pq_topk_from_codes
 
+        derived = self._standing(self.pq_dest, "PQ")
         books = load_pq_books(self.pq_dest)
         if books is None:
             raise ValueError(
                 "PQ index has no trained codebooks — run index-retrieval"
             )
-        derived = read_derived(self.spark, self.pq_dest)
-        if derived is None:
-            raise ValueError("PQ index is empty — run index-retrieval")
         codes = lww_latest(derived, ["vec_id"]).select("vec_id", "codes")
         probe = local_frame(
             self.spark, [(-1, [float(x) for x in vector])], _VECTOR_PROBE

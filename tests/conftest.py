@@ -3,7 +3,11 @@ from __future__ import annotations
 import pytest
 
 from fluxdb_spark import get_spark
-from fluxdb_spark.schema import CHANGELOG_SCHEMA, SPECULATIVE_SCHEMA
+from fluxdb_spark.schema import (
+    CHANGELOG_SCHEMA,
+    SPECULATIVE_SCHEMA,
+    local_frame,
+)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -35,6 +39,9 @@ def make_changelog(spark, rows):
     """rows: (tablet_id, height, primary_key, value) or full 8-tuples.
 
     value == "" or None => tombstone (reference tablet.go:325-327).
+    Built as a LocalRelation (`schema.local_frame`), as flushes build
+    their batches: a list-built frame is evaluated one partition after
+    another inside `write_batch`'s single write task.
     """
     full = []
     for r in rows:
@@ -55,7 +62,7 @@ def make_changelog(spark, rows):
                 int(height),
             )
         )
-    return spark.createDataFrame(full, CHANGELOG_SCHEMA)
+    return local_frame(spark, full, CHANGELOG_SCHEMA)
 
 
 def make_speculative(spark, rows, parent=None):

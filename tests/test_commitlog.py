@@ -1127,6 +1127,33 @@ class TestMaterializedAggregate:
         assert self._got(spark, dest) == self._expect(store)
         assert applied_version(dest) == store.latest_commit_version()
 
+    def test_corrupt_state_raises_instead_of_refolding(
+        self, spark, store, tmp_path
+    ):
+        """A truncated state file must not read as "nothing folded yet":
+        the next catch-up would fold every commit again on top of the
+        table (3 rows + 4 rows = n_rows 7). The maintainer fails loudly
+        and the table keeps its last good rows."""
+        from pyspark.errors import StreamingQueryException
+
+        from fluxdb_spark.streaming.materialize import _state_path
+
+        dest, ck = str(tmp_path / "agg"), str(tmp_path / "ck")
+        store.write_batch(batch(spark, [1, 2, 3]))
+        self._run(spark, str(store.root), dest, ck)
+        before = self._got(spark, dest)
+        assert before == {("tbl", 3, 3, 1)}
+        with open(_state_path(dest), "r+") as f:
+            f.truncate(10)
+        store.write_batch(batch(spark, [4]))
+        with pytest.raises(
+            StreamingQueryException,
+            match=r"ValueError: derived table state \S*_mat_state\.json"
+            r" is unreadable or corrupt",
+        ):
+            self._run(spark, str(store.root), dest, ck)
+        assert self._got(spark, dest) == before
+
     def test_rejects_non_algebraic_merge(self, spark, store, tmp_path):
         from fluxdb_spark.streaming.materialize import materialize_aggregate
 

@@ -334,6 +334,57 @@ class TestRowwiseMaterializer:
                 spark, str(store.root), dest, rt.minhash_transform(), ck
             )
 
+    def test_streaming_maintainer_matches_refresh(
+        self, spark, store, tmp_path
+    ):
+        """The continuous maintainer (`materialize_rowwise`: the commit
+        stream as the trigger) and the one-shot `refresh` run the same
+        catch-up: after each of two appends and a `delete_where` (which
+        forces a rebuild) both dests hold the same batch directories,
+        the same state file bytes and the same derived rows."""
+        src = str(store.root)
+        streamed = str(tmp_path / "streamed")
+        refreshed = str(tmp_path / "refreshed")
+
+        def catch_up():
+            q = rt.materialize_rowwise(
+                spark, src, streamed, rt.minhash_transform(),
+                str(tmp_path / "ck_stream"), trigger_seconds=0.5,
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            rt.refresh(
+                spark, src, refreshed, rt.minhash_transform(),
+                str(tmp_path / "ck_refresh"),
+            )
+
+        def state_bytes(dest):
+            with open(os.path.join(dest, "_mat_state.json"), "rb") as f:
+                return f.read()
+
+        def rows(dest):
+            return sorted(
+                tuple(r) for r in rt.read_derived(spark, dest).collect()
+            )
+
+        for step in (
+            lambda: store.write_batch(doc_rows(spark, DOCS1)),
+            lambda: store.write_batch(doc_rows(spark, DOCS2)),
+            lambda: store.delete_where("primary_key = '1'"),
+        ):
+            step()
+            catch_up()
+            assert _commit_dirs(streamed) == _commit_dirs(refreshed)
+            assert state_bytes(streamed) == state_bytes(refreshed)
+            assert rows(streamed) == rows(refreshed)
+        # the delete was a rewrite: both rebuilt into one directory
+        assert _commit_dirs(streamed) == [
+            f"commit_hi={store.latest_commit_version()}"
+        ]
+        assert 1 not in {r[0] for r in rows(streamed)}
+
 
 class TestFoldCompaction:
     """compact_derived(fold_keys=...): the derived table is rewritten to
@@ -819,6 +870,63 @@ class TestMaterializedBm25:
         assert self._rank(spark, p_dest, d_dest, stats) == self._recompute(
             spark, live
         )
+
+
+def _save_bm25_stats(dest):
+    """The stats sidecar bm25_refresh writes, without Spark."""
+    with open(dest + "._stats.json", "w") as f:
+        json.dump({"n_docs": 2, "tot_dl": 7, "applied_version": 1}, f)
+
+
+class TestSidecars:
+    """Every model / stats sidecar keeps one rule: a missing sidecar
+    reads as None, a saved one reads back, and a corrupt one raises
+    ValueError naming the file (never "never trained")."""
+
+    @pytest.mark.parametrize(
+        "suffix, save, load, want",
+        [
+            (
+                "._pq_books.json",
+                lambda d: rt.save_pq_books(d, [[[1.0, 2.0]]]),
+                rt.load_pq_books,
+                [[[1.0, 2.0]]],
+            ),
+            (
+                "._bpe_merges.json",
+                lambda d: rt.save_bpe_merges(d, [("a", "b")]),
+                rt.load_bpe_merges,
+                [("a", "b")],
+            ),
+            (
+                "._stats.json",
+                _save_bm25_stats,
+                rt.load_bm25_stats,
+                (2, 7),
+            ),
+            (
+                "._centroids.json",
+                lambda d: rt.save_centroids(d, [[1.0, 0.0]], 0.5),
+                rt.load_centroid_model,
+                {"centroids": [[1.0, 0.0]], "baseline_mean_dist": 0.5},
+            ),
+        ],
+        ids=["pq_books", "bpe_merges", "stats", "centroids"],
+    )
+    def test_missing_saved_and_corrupt(
+        self, tmp_path, suffix, save, load, want
+    ):
+        import re
+
+        dest = str(tmp_path / "idx")
+        path = dest + suffix
+        assert load(dest) is None
+        save(dest)
+        assert load(dest) == want
+        with open(path, "w") as f:
+            f.write('{"trunc')
+        with pytest.raises(ValueError, match=re.escape(path)):
+            load(dest)
 
 
 class TestCentroidPersistence:
