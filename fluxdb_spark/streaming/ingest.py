@@ -21,7 +21,9 @@ Python worker.
 
 Serving reads go through `FluxEngine` below, the analog of the reference's
 FluxDB facade (fluxdb.go:104-154): `speculative_writes(height)` +
-temporal operators.
+temporal operators, except the point reads (R2 `row_at`, R3 `singlet_at`,
+R5 `has_rows`), which read the committed files through Arrow on the
+driver and fold `speculative_rows(height)` in Python, with no Spark job.
 """
 
 from __future__ import annotations
@@ -31,7 +33,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fluxdb_spark.forkdb import BlockRef, ForkDB, SpeculativeBlock
-from fluxdb_spark.schema import CHANGELOG_SCHEMA, local_frame
+from fluxdb_spark.schema import (
+    CHANGELOG_COLUMNS,
+    CHANGELOG_SCHEMA,
+    local_frame,
+)
 from fluxdb_spark.store import ChangelogStore
 
 FLUSH_ROWS = 5_000  # reference pipeline.go:374-382
@@ -175,21 +181,29 @@ class IngestPipeline:
 
     # --- serve-side overlay ------------------------------------------------
 
-    def speculative_writes(
+    def speculative_rows(
         self, up_to_height: int | None = None, head_id: str | None = None
-    ) -> DataFrame | None:
+    ) -> list[tuple]:
         """S6 — the speculative rows of the current head fork (reference
-        FetchSpeculativeWrites, pipeline.go:228-265): walk LIB -> head,
-        optionally truncate at a height or at a specific fork block."""
+        FetchSpeculativeWrites, pipeline.go:228-265), oldest block first:
+        walk LIB -> head, optionally truncate at a height or at a specific
+        fork block."""
         target = head_id or (self.head.id if self.head else None)
         if target is None:
-            return None
-        segment = self.forkdb.reversible_segment(target)
+            return []
         rows: list[tuple] = []
-        for blk in segment:
+        for blk in self.forkdb.reversible_segment(target):
             if up_to_height is not None and blk.ref.num > up_to_height:
                 break
             rows.extend(blk.rows)
+        return rows
+
+    def speculative_writes(
+        self, up_to_height: int | None = None, head_id: str | None = None
+    ) -> DataFrame | None:
+        """`speculative_rows` as a DataFrame (None when there are none),
+        the overlay the Spark read plans union on top of durable data."""
+        rows = self.speculative_rows(up_to_height, head_id)
         if not rows:
             return None
         return local_frame(self.store.spark, rows, CHANGELOG_SCHEMA)
@@ -376,24 +390,69 @@ class FluxEngine:
             **kw,
         )
 
-    def row_at(
-        self, tablet_id: str, height: int, primary_key: str, **kw
-    ) -> DataFrame:
-        from fluxdb_spark.operators import row_at
+    def _point(
+        self,
+        tablet_id: str,
+        height: int,
+        primary_key: str | None,
+        collection: str | None,
+    ) -> list[tuple]:
+        """R2 / R3 on the driver, with no Spark job: the newest version at
+        or below `height` of `primary_key` in the tablet (of any key when
+        it is None: a singlet), as zero or one CHANGELOG_SCHEMA tuple.
 
-        spec = self.pipeline.speculative_writes(up_to_height=height)
-        return row_at(
-            self.store.changelog(max_height=height), tablet_id, height,
-            primary_key, spec, **kw,
+        Durable versions come from the store's Arrow scan as `_src` 0 and
+        the overlay's as `_src` 1; the max (height, _src) wins and a
+        tombstone answers nothing — the rule of operators/temporal.py,
+        which stays the oracle (tests/test_properties.py)."""
+        best = None  # ((height, _src), row)
+        durable = self.store.point_versions(
+            tablet_id, height, primary_key, collection
+        )
+        if durable.num_rows:
+            top = durable.sort_by([("height", "descending")]).slice(0, 1)
+            row = tuple(top.column(c)[0].as_py() for c in CHANGELOG_COLUMNS)
+            best = ((row[2], 0), row)
+        for row in self.pipeline.speculative_rows(up_to_height=height):
+            if (
+                row[1] == tablet_id
+                and row[2] <= height
+                and (primary_key is None or row[3] == primary_key)
+                and (collection is None or row[0] == collection)
+                and (best is None or (row[2], 1) >= best[0])
+            ):
+                best = ((row[2], 1), row)
+        # a null flag answers nothing either, as under Spark's
+        # ~is_deletion filter
+        if best is None or best[1][5] in (True, None):
+            return []
+        return [best[1]]
+
+    def row_at(
+        self,
+        tablet_id: str,
+        height: int,
+        primary_key: str,
+        collection: str | None = None,
+    ) -> DataFrame:
+        """R2 (reference ReadTabletRowAt, read.go:180-293), answered on
+        the driver by `_point`; the frame is a LocalRelation, so
+        collecting it runs no Spark job either."""
+        return local_frame(
+            self.spark,
+            self._point(tablet_id, height, primary_key, collection),
+            CHANGELOG_SCHEMA,
         )
 
-    def singlet_at(self, singlet_id: str, height: int, **kw) -> DataFrame:
-        from fluxdb_spark.operators import singlet_at
-
-        spec = self.pipeline.speculative_writes(up_to_height=height)
-        return singlet_at(
-            self.store.changelog(max_height=height), singlet_id, height, spec,
-            **kw,
+    def singlet_at(
+        self, singlet_id: str, height: int, collection: str | None = None
+    ) -> DataFrame:
+        """R3 (reference ReadSingletEntryAt, read.go:300-349), answered
+        on the driver like `row_at`."""
+        return local_frame(
+            self.spark,
+            self._point(singlet_id, height, None, collection),
+            CHANGELOG_SCHEMA,
         )
 
     def singlet_history(self, singlet_id: str, **kw) -> DataFrame:
@@ -403,13 +462,21 @@ class FluxEngine:
         return singlet_history(self.store.changelog(), singlet_id, spec, **kw)
 
     def has_rows(self, tablet_id: str, collection: str | None = None) -> bool:
-        from fluxdb_spark.operators import has_rows
-
-        log = self.store.changelog()
-        spec = self.pipeline.speculative_writes()
-        if spec is not None:
-            log = log.unionByName(spec)
-        return has_rows(log, tablet_id, collection=collection)
+        """R5 (reference HasSeenAnyRowForTablet, read.go:410-415) on the
+        driver: the overlay first, then the store's Arrow scan up to its
+        first batch that holds a row."""
+        if any(
+            row[1] == tablet_id
+            and (collection is None or row[0] == collection)
+            for row in self.pipeline.speculative_rows()
+        ):
+            return True
+        return any(
+            batch.num_rows
+            for batch in self.store.point_scan(
+                tablet_id, collection=collection
+            ).to_batches()
+        )
 
     def checkpoint(self):
         """R6 — last durable (height, block); the overlay never moves it."""

@@ -668,19 +668,22 @@ def load_centroid_model(dest: str) -> dict | None:
     legacy in-directory `_centroids.json`, lost on the next swap) is
     migrated to the dict form at the sibling path on sight."""
     model = _load_json(centroids_path(dest))
+    legacy = None
     if model is None:
         legacy = os.path.join(dest, "_centroids.json")
         model = _load_json(legacy)
-        if model is not None:
-            try:
-                os.remove(legacy)
-            except OSError:
-                pass
     if model is None:
         return None
-    if isinstance(model, list):
-        model = {"centroids": model, "baseline_mean_dist": None}
+    if legacy is not None or isinstance(model, list):
+        if isinstance(model, list):
+            model = {"centroids": model, "baseline_mean_dist": None}
+        # the sidecar lands before the legacy file goes, in either form
         _save_sidecar(dest, "centroids", model)
+    if legacy is not None:
+        try:
+            os.remove(legacy)
+        except OSError:
+            pass
     return model
 
 

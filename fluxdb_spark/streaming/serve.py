@@ -38,13 +38,18 @@ Responses are `{"rows": [...], "count": n}` JSON; errors are HTTP 400
 then `limit` below it) — a serving endpoint returns pages, never an
 unbounded corpus; the driver-side collect is bounded by the same cap.
 
-Scale shape: each request is one `state_at`-class plan — height bands
+Scale shape: the point routes (/v1/row_at, /v1/singlet_at, /v1/has_rows)
+run no Spark job. The engine reads one tablet's committed files through
+Arrow on the driver — the band bound and the collection prune files by
+their Hive path, the tablet / key / height predicates prune row groups —
+and folds the ForkDB overlay in Python, so a point read costs the bytes
+of the row groups it touches, not a plan build and a job. Every other
+temporal route is one `state_at`-class Spark plan: height bands
 partition-prune the scan, the LWW fold is a combine-friendly max_by, the
-overlay union is a JVM `LocalRelation` built from the driver's ForkDB rows
-through Arrow (`schema.local_frame`; no Python worker runs to scan it) —
-so the per-request cost is the store read itself; concurrent requests
-are independent Spark actions (scheduled FAIR across the handler
-threads).
+overlay union is a JVM `LocalRelation` built from the driver's ForkDB
+rows through Arrow (`schema.local_frame`; no Python worker runs to scan
+it); concurrent requests are independent Spark actions (scheduled FAIR
+across the handler threads).
 """
 
 from __future__ import annotations
@@ -52,6 +57,7 @@ from __future__ import annotations
 import json
 import re
 
+from fluxdb_spark.schema import CHANGELOG_COLUMNS
 from fluxdb_spark.streaming.metrics import prometheus_text
 
 
@@ -102,12 +108,19 @@ def validate_metric_expr(expr: str) -> str:
     return expr
 
 
+def _page(rows: list[dict], limit: int) -> dict:
+    return {
+        "rows": rows[:limit],
+        "count": min(len(rows), limit),
+        "truncated": len(rows) > limit,
+    }
+
+
 def _rows_payload(df, limit: int) -> dict:
-    rows = [r.asDict(recursive=True) for r in df.limit(limit + 1).collect()]
-    truncated = len(rows) > limit
-    if truncated:
-        rows = rows[:limit]
-    return {"rows": rows, "count": len(rows), "truncated": truncated}
+    return _page(
+        [r.asDict(recursive=True) for r in df.limit(limit + 1).collect()],
+        limit,
+    )
 
 
 class QueryServer:
@@ -337,6 +350,18 @@ class QueryServer:
         if "collection" in p:
             kw["collection"] = p["collection"]
 
+        if path in ("/v1/row_at", "/v1/singlet_at"):
+            # the engine's driver-side answer as it stands: no Spark job
+            # and no DataFrame round trip
+            row_at = path == "/v1/row_at"
+            rows = self.engine._point(
+                p["tablet"] if row_at else p["singlet"],
+                _int("height"),
+                p["key"] if row_at else None,
+                p.get("collection"),
+            )
+            payload = [dict(zip(CHANGELOG_COLUMNS, r)) for r in rows]
+            return json.dumps(_page(payload, limit)), "application/json"
         if path == "/v1/state_at":
             df = self.engine.state_at(p["tablet"], _int("height"), **kw)
             df = df.orderBy("primary_key")
@@ -352,12 +377,6 @@ class QueryServer:
             df = self.engine.state_join(
                 tablets, _int("height"), how=how, **kw
             )
-        elif path == "/v1/row_at":
-            df = self.engine.row_at(
-                p["tablet"], _int("height"), p["key"], **kw
-            )
-        elif path == "/v1/singlet_at":
-            df = self.engine.singlet_at(p["singlet"], _int("height"), **kw)
         elif path == "/v1/singlet_history":
             df = self.engine.singlet_history(p["singlet"], **kw)
         elif path == "/v1/state_series":

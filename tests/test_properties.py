@@ -18,6 +18,8 @@ tablet.go:251-278)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -668,6 +670,231 @@ def test_fork_fuzz_engine_matches_chain_replay(spark, tmp_path_factory, scenario
             f"mismatch at height {h}: finalized {n_final} of "
             f"{[b[0] for b in chain]}"
         )
+
+
+# ---------------------------------------------------------------------------
+# Driver-side point reads (FluxEngine.row_at / singlet_at / has_rows read
+# the committed files through Arrow and fold the overlay in Python) against
+# the Spark operators of operators/temporal.py over the same store.
+
+POINT_BAND = 4  # small bands: reads land on both sides of a boundary
+POINT_COLLECTIONS = ["a:b", "7"]  # escaped in the Hive path; numeric-looking
+
+
+def _point_row(collection, tablet, height, pk, is_del, tag):
+    value = None if is_del else f"{tag}{height}{pk}"
+    return (
+        collection, tablet, height, pk, value, is_del, f"{height:08x}", height,
+    )
+
+
+def point_probes(top):
+    """(read, tablet, key, height, collection): "w" exists only in the
+    pending batch; singlet reads go to "s", whose key is always ""."""
+    heights = st.integers(min_value=-1, max_value=top + 3)
+    colls = st.sampled_from([None] + POINT_COLLECTIONS)
+    tablets = st.sampled_from(["t", "u", "v", "s", "w"])
+    return st.one_of(
+        st.tuples(
+            st.just("row_at"), tablets, st.sampled_from(["p", "q", ""]),
+            heights, colls,
+        ),
+        st.tuples(
+            st.just("singlet_at"), st.sampled_from(["s", "w"]), st.just(""),
+            heights, colls,
+        ),
+        st.tuples(
+            st.just("has_rows"), tablets, st.just(""), st.just(0), colls
+        ),
+    )
+
+
+@st.composite
+def point_stores(draw):
+    """A random store history: durable rows over heights 0..top (a filler
+    tablet keeps them gap-free) cut into batches; an overlay above a LIB
+    at or below the checkpoint, so some of its rows rewrite durable
+    heights, plus an overlay-only tablet "v"; optionally expired bands
+    and a pending batch. Keys are unique per (tablet, pk, height) on each
+    side, and the singlet tablet "s" only has key "", so every answer is
+    determined."""
+    top = draw(st.integers(min_value=5, max_value=11))
+
+    def cells(tablets, lo, hi, max_size):
+        h = st.integers(min_value=lo, max_value=hi)
+        keyed = draw(
+            st.lists(
+                st.tuples(
+                    st.sampled_from(tablets), st.sampled_from(["p", "q"]), h
+                ),
+                max_size=max_size,
+                unique=True,
+            )
+        )
+        singlet = draw(st.lists(h, max_size=4, unique=True))
+        return [
+            (draw(st.sampled_from(POINT_COLLECTIONS)), t, hh, pk,
+             draw(st.booleans()))
+            for t, pk, hh in keyed + [("s", "", hh) for hh in singlet]
+        ]
+
+    lib = draw(st.integers(min_value=top - 3, max_value=top))
+    return {
+        "top": top,
+        "durable": cells(["t", "u"], 0, top, 12),
+        "cuts": sorted(
+            draw(
+                st.lists(
+                    st.integers(min_value=1, max_value=top),
+                    max_size=2,
+                    unique=True,
+                )
+            )
+        ),
+        "lib": lib,
+        "overlay": cells(["t", "u", "v"], lib + 1, top + 3, 6),
+        "expire": draw(st.booleans()),
+        "pending": draw(st.booleans()),
+        "probes": draw(st.lists(point_probes(top), min_size=3, max_size=6)),
+        "boundary": draw(st.sampled_from([POINT_BAND, 2 * POINT_BAND])),
+    }
+
+
+def _build_point_store(spark, root, data_format, sc):
+    import json
+
+    from fluxdb_spark.forkdb import BlockRef
+    from fluxdb_spark.schema import local_frame
+    from fluxdb_spark.store import ChangelogStore
+    from fluxdb_spark.streaming.ingest import FluxEngine
+
+    def frame(rows):
+        return local_frame(spark, rows, CHANGELOG_SCHEMA)
+
+    top = sc["top"]
+    rows = [_point_row(*cell, "v") for cell in sc["durable"]]
+    rows += [_point_row("7", "z", h, "f", False, "f") for h in range(top + 1)]
+    store = ChangelogStore(
+        spark, root, height_band=POINT_BAND, data_format=data_format
+    )
+    bounds = [0] + sc["cuts"] + [top + 1]
+    for lo, hi in zip(bounds, bounds[1:]):
+        store.write_batch(frame([r for r in rows if lo <= r[2] < hi]))
+    if sc["expire"]:
+        store.expire_bands(POINT_BAND)
+    eng = FluxEngine(spark, root)
+    if sc["pending"]:
+        # a batch whose commit point never landed: its files are in the
+        # band directories, its manifest names them, the checkpoint is
+        # below its top height — its rows (tablet "w" among them) must
+        # stay invisible to both read paths
+        ckpt = store.checkpoint()
+        store.write_batch(
+            frame(
+                [
+                    _point_row("7", t, h, pk, False, "pend")
+                    for h in (top + 1, top + 2)
+                    for t, pk in (("t", "p"), ("w", "q"), ("s", ""))
+                ]
+            )
+        )
+        added = store._backend.commit_log.entries()[-1]["add"]
+        store._write_checkpoint(ckpt.height, ckpt.block_id, ckpt.block_num)
+        manifest = os.path.join(store._manifest_dir, "batch-pending.json")
+        with open(manifest, "w") as f:
+            json.dump(
+                {
+                    "hi": top + 2,
+                    "shard": None,
+                    "targets": [os.path.join(root, a) for a in added],
+                    "staging": "",
+                },
+                f,
+            )
+    pipe = eng.pipeline
+    pipe.forkdb.lib = BlockRef("lib", sc["lib"])
+    parent = "lib"
+    for h in range(sc["lib"] + 1, top + 4):
+        block = [_point_row(*c, "o") for c in sc["overlay"] if c[2] == h]
+        pipe.process_new_block(f"o{h}", h, parent, block)
+        parent = f"o{h}"
+    return eng
+
+
+@pytest.mark.parametrize("data_format", ["parquet", "orc"])
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(scenario=point_stores())
+def test_driver_point_reads_match_spark_operators(
+    spark, tmp_path_factory, data_format, scenario
+):
+    """The driver-side R2 / R3 / R5 equal the Spark operators over
+    `changelog(max_height=)` plus `speculative_writes` — tombstones,
+    same-height overlay rewrites, overlay-only tablets, a pending batch,
+    band boundaries, expired bands and escaped collections included."""
+    from fluxdb_spark.operators import temporal
+    from fluxdb_spark.store import WriteConsistencyError
+
+    root = str(tmp_path_factory.mktemp("points") / "db")
+    eng = _build_point_store(spark, root, data_format, scenario)
+    pipe, store = eng.pipeline, eng.store
+    top, b = scenario["top"], scenario["boundary"]
+    probes = scenario["probes"] + [
+        ("row_at", "t", "p", b - 1, None),
+        ("row_at", "t", "p", b, None),
+        ("singlet_at", "s", "", b - 1, None),
+        ("singlet_at", "s", "", b, None),
+    ]
+    if scenario["pending"]:
+        # the pending batch's files are its only rows of tablet "w"
+        assert eng.has_rows("w") is False
+        probes += [
+            ("row_at", "t", "p", top + 2, "7"),
+            ("singlet_at", "s", "", top + 2, "7"),
+        ]
+
+    for kind, tablet, pk, h, coll in probes:
+        where = (kind, tablet, pk, h, coll)
+        if kind == "has_rows":
+            log = store.changelog()
+            spec = pipe.speculative_writes()
+            if spec is not None:
+                log = log.unionByName(spec)
+            want = temporal.has_rows(log, tablet, collection=coll)
+            assert eng.has_rows(tablet, collection=coll) == want, where
+            continue
+        if kind == "row_at":
+            def spark_read(log, spec):
+                return temporal.row_at(
+                    log, tablet, h, pk, spec, collection=coll
+                )
+
+            def driver_read():
+                return eng.row_at(tablet, h, pk, collection=coll)
+        else:
+            def spark_read(log, spec):
+                return temporal.singlet_at(
+                    log, tablet, h, spec, collection=coll
+                )
+
+            def driver_read():
+                return eng.singlet_at(tablet, h, collection=coll)
+        if h < store.retention_horizon():
+            with pytest.raises(WriteConsistencyError):
+                store.changelog(max_height=h)
+            with pytest.raises(WriteConsistencyError):
+                driver_read()
+            continue
+        want = spark_read(
+            store.changelog(max_height=h),
+            pipe.speculative_writes(up_to_height=h),
+        ).collect()
+        assert [tuple(r) for r in driver_read().collect()] == [
+            tuple(r) for r in want
+        ], where
 
 
 @st.composite

@@ -996,6 +996,18 @@ class TestCentroidPersistence:
         # subsequent loads read the sibling
         assert rt.load_centroids(dest) == cents
 
+    def test_legacy_in_dir_dict_model_migrates_to_sibling(self, tmp_path):
+        dest = str(tmp_path / "asg")
+        os.makedirs(dest)
+        model = {"centroids": [[5, 6], [7, 8]], "baseline_mean_dist": 1.5}
+        with open(os.path.join(dest, "_centroids.json"), "w") as f:
+            json.dump(model, f)
+        assert rt.load_centroid_model(dest) == model
+        assert os.path.exists(rt.centroids_path(dest))
+        assert not os.path.exists(os.path.join(dest, "_centroids.json"))
+        # subsequent loads read the sibling
+        assert rt.load_centroid_model(dest) == model
+
 
 class TestCentroidDrift:
     def test_drift_flagged_on_distribution_shift(

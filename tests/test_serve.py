@@ -282,6 +282,61 @@ class TestQueryServer:
         assert got["count"] == 0 and got["truncated"] is True
 
 
+class TestPointRoutesStartNoSparkJob:
+    """/v1/row_at, /v1/singlet_at and /v1/has_rows are answered on the
+    driver (Arrow scan of the committed files plus the overlay), so a
+    point read starts no Spark job; /v1/state_at still runs on Spark.
+    Jobs are counted per route call with the status tracker, in a job
+    group of the calling thread."""
+
+    def _jobs(self, engine, server, path, params):
+        sc = engine.spark.sparkContext
+        bus = sc._jsc.sc().listenerBus()
+        group = f"route-{path.rsplit('/', 1)[-1]}"
+        sc.setJobGroup(group, path)
+        try:
+            body, _ctype = server._route(path, params)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()  # job-start events reach the tracker async
+        return json.loads(body), sc.statusTracker().getJobIdsForGroup(group)
+
+    def test_point_routes_run_no_job_and_state_at_does(self, engine, server):
+        engine.pipeline.process_new_block(
+            "b101a", 101, "b100",
+            [
+                clrow("tbl", 101, "002", "forkA", "b101a"),
+                clrow("sgl", 101, "", "s1", "b101a"),
+            ],
+        )
+        body, jobs = self._jobs(
+            engine, server, "/v1/row_at",
+            {"tablet": "tbl", "height": "101", "key": "001",
+             "collection": "tst"},
+        )
+        assert [r["value"] for r in body["rows"]] == ["base"] and jobs == []
+        body, jobs = self._jobs(
+            engine, server, "/v1/row_at",
+            {"tablet": "tbl", "height": "101", "key": "002"},
+        )
+        assert [r["value"] for r in body["rows"]] == ["forkA"] and jobs == []
+        body, jobs = self._jobs(
+            engine, server, "/v1/singlet_at",
+            {"singlet": "sgl", "height": "101"},
+        )
+        assert [r["value"] for r in body["rows"]] == ["s1"] and jobs == []
+        for tablet, want in (("tbl", True), ("sgl", True), ("nope", False)):
+            body, jobs = self._jobs(
+                engine, server, "/v1/has_rows", {"tablet": tablet}
+            )
+            assert body == {"has_rows": want} and jobs == [], tablet
+        body, jobs = self._jobs(
+            engine, server, "/v1/state_at", {"tablet": "tbl", "height": "101"}
+        )
+        assert [r["value"] for r in body["rows"]] == ["base", "forkA"]
+        assert len(jobs) >= 1
+
+
 class TestRetrievalRoutes:
     """/v1/ann_topk and /v1/bm25: the serving endpoint reads the
     STANDING materialized indexes — and keeps answering correctly while
